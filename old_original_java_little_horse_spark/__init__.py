@@ -7,8 +7,7 @@ capabilities Spark-first:
 
 - ``engine``     — the event-fold state machine (pure Python core,
                    executed via ``applyInPandas`` in batch and
-                   ``applyInPandasWithState`` / ``transformWithStateInPandas``
-                   in streaming).
+                   ``transformWithStateInPandas`` in streaming).
 - ``sdk``        — workflow-as-code builder emitting WFSpec JSON
                    (port of the reference's Python SDK surface).
 - ``operators``  — relational parity operators (filters, joins, aggs,

@@ -12,7 +12,7 @@ That purity is the point: the same function is
 - unit-tested without Spark (tests mirror the reference harness
   scenarios, `lhctl/lh_test_harness/tests/*`),
 - applied per-key in batch via ``applyInPandas`` (engine/batch.py),
-- applied per-key in streaming via ``applyInPandasWithState``
+- applied per-key in streaming via ``transformWithStateInPandas``
   (streaming/engine.py),
 - usable as the batch oracle for the streaming engine.
 

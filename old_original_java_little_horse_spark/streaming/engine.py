@@ -4,40 +4,48 @@ SURVEY.md §3.2 / §7 step 4 — the reference's Kafka Streams topology
 (`J/scheduler/SchedulerTopology.java:23-154`) re-expressed as ONE
 streaming query:
 
-    events → groupBy(wf_run_id) → applyInPandasWithState(fold)
+    events → groupBy(wf_run_id) → transformWithStateInPandas(fold)
            → tagged output rows → filter-split → sinks
 
-- Per-key state is the WFRun JSON document (the reference's RocksDB
-  value, `SchedulerProcessor.java:133-231`); Structured Streaming's
-  state store (RocksDB-backed in prod) replaces the store + changelog
-  topic pair — the write-amplification the reference laments in
-  `SchedulerTopology.java:33-46` disappears.
+- Per-key state is the WFRun JSON document in a typed value state
+  (the reference's RocksDB value, `SchedulerProcessor.java:133-231`);
+  Structured Streaming's RocksDB state store replaces the store +
+  changelog topic pair — the write-amplification the reference
+  laments in `SchedulerTopology.java:33-46` disappears.
 - Intra-key ordering: events are sorted by `offset` inside each
   micro-batch group (Structured Streaming does not guarantee
   intra-batch order — SURVEY §2.10).
 - Outputs are a single tagged stream: `kind` ∈ {snapshot,
-  task_schedule, timer}; the per-TaskDef fanout (S4) becomes a filter
-  or a Kafka sink with a `topic` column — strictly better than the
-  reference's one-processor-per-TaskDef (§2.2 P1).
-- Timers: the live path (`start_continuous`) fires its own stored
-  timers via group-state ProcessingTimeTimeout — the reference's 1 s
-  punctuator (`SchedulerProcessor.java:56-60`, `Constants.java:36`)
-  without any satellite process; a SLEEP completes with no further
-  input.  Replay paths keep timers as emitted `kind='timer'` rows +
-  explicit TIMER_EVENTs (deterministic: no wall-clock reads), served
-  by the legacy `TimerPump` when needed.
+  task_schedule, timer, index}; the per-TaskDef fanout (S4) becomes a
+  filter or a Kafka sink with a `topic` column — strictly better than
+  the reference's one-processor-per-TaskDef (§2.2 P1).
+- Timers: the live path (`start_continuous`) registers one native
+  processing-time timer per stored `WFRunTimer` and folds it in the
+  per-timer callback — the reference's 1 s punctuator
+  (`SchedulerProcessor.java:56-60`, `Constants.java:36`) without any
+  satellite process; a SLEEP completes with no further input.  Replay
+  paths keep timers as emitted `kind='timer'` rows + explicit
+  TIMER_EVENTs (deterministic: no wall-clock reads), served by the
+  legacy `TimerPump` when needed.
+- Every starter goes through `_start_query`, which scopes the RocksDB
+  provider the processor's typed state needs and refuses checkpoints
+  an older release wrote with a different provider.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+from pathlib import Path
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.stateful_processor import (
+    ExpiredTimerInfo, StatefulProcessor, StatefulProcessorHandle, TimerValues,
+)
 from pyspark.sql.types import (
     IntegerType, LongType, StringType, StructField, StructType,
 )
@@ -56,27 +64,16 @@ OUTPUT_SCHEMA = StructType([
     StructField("payload", StringType()),    # full JSON of the row's object
 ])
 
-# Engine bookkeeping lives in the state tuple, NOT inside the WFRun
-# JSON document: the document is the public surface (snapshots, index,
-# lhctl get) and must contain only reference fields.  `max_offset`
-# gives snapshots a monotonic sequence number (latest-wins selection
-# in the query layer); `max_event_ts` drives the lateness bound;
-# `pending_json` is the run's stored-timer list (the reference's timer
-# store, SchedulerProcessor.java:56-60) and `tomb` marks an evicted
-# terminal run (full document dropped, dedupe marker retained).
-STATE_SCHEMA = StructType([
-    StructField("state_json", StringType()),
-    StructField("max_offset", LongType()),
-    StructField("max_event_ts", LongType()),
-    StructField("pending_json", StringType()),
-    StructField("tomb", IntegerType()),
-])
+_COLS = [f.name for f in OUTPUT_SCHEMA.fields]
 
-# A tombstone keeps exactly-once under redelivery (a duplicate
-# WF_RUN_STARTED for an evicted run must NOT restart it) at ~40 bytes
-# instead of the full multi-KB WFRun document — at 100× run
+# Per-key processor state (see WFRunFoldProcessor).  A tombstone
+# (`tomb`=1, empty document) keeps exactly-once under redelivery — a
+# duplicate WF_RUN_STARTED for an evicted run must NOT restart it — at
+# ~40 bytes instead of the full multi-KB WFRun document: at 100× run
 # cardinality the state store holds markers, not history.
-_TOMB_STATE = ""
+_RUN_STATE_SCHEMA = ("state_json string, max_offset long, "
+                     "max_event_ts long, tomb integer")
+_TIMER_STATE_SCHEMA = "payload string"
 
 
 def _timer_key(t: dict) -> tuple:
@@ -85,9 +82,7 @@ def _timer_key(t: dict) -> tuple:
 
 def emit_ctx_rows(out_rows: list, wf_run_id: str, ctx, pending: list) -> None:
     """Append a fold invocation's task-schedule and timer output rows
-    (shared by the applyInPandasWithState and transformWithState
-    engines; new timers also join `pending`, the run's stored-timer
-    list)."""
+    (new timers also join `pending`, the run's stored-timer list)."""
     for tsr in ctx.to_schedule:
         out_rows.append({
             "wf_run_id": wf_run_id, "kind": "task_schedule",
@@ -128,8 +123,7 @@ def _ival(x) -> int:
 
 def prepare_events(events: list[dict], max_offset: int, max_event_ts: int,
                    allowed_lateness_ms: int | None) -> tuple[list[dict], int, int]:
-    """Order + bound a micro-batch group's events (shared by both
-    stateful engines): sort by per-key offset (Structured Streaming
+    """Order + bound a micro-batch group's events: sort by per-key offset (Structured Streaming
     gives no intra-batch order), drop events beyond the lateness
     allowance, and advance the key's (max_offset, max_event_ts) —
     `seq` must STRICTLY increase whenever events fold, so an
@@ -204,12 +198,7 @@ def fire_matured_timers(spec: dict, executor, wf_run_id: str, state,
     """Fold every matured stored timer as a TIMER_EVENT; firing can
     create new timers (sequential SLEEPs), so loop to quiescence.
     Synthetic offsets continue the per-key sequence (+1 each) so
-    snapshot `seq` stays monotonic.
-
-    ONE implementation for BOTH stateful engines
-    (applyInPandasWithState here, transformWithState in tws.py) — the
-    firing order below is a cross-engine parity contract, so the
-    twins share the code instead of promising byte-equality."""
+    snapshot `seq` stays monotonic."""
     fired = False
     while True:
         matured = [t for t in pending
@@ -241,163 +230,178 @@ def fire_matured_timers(spec: dict, executor, wf_run_id: str, state,
     return state, pending, max_offset, fired
 
 
-def make_update_fn(spec: dict, executor: TaskExecutor | None = None,
-                   allowed_lateness_ms: int | None = None,
-                   native_timers: bool = False,
-                   evict_completed: bool = False,
-                   tombstone_ttl_ms: int | None = None):
-    """Build the applyInPandasWithState update function for a spec.
+def require_protobuf() -> None:
+    """Fail fast where the engine cannot run.  Spark's
+    transformWithStateInPandas Python worker speaks a protobuf
+    state-server protocol: without `google.protobuf` importable the
+    query dies at initialization
+    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE).
+    `protobuf_compat.ensure_protobuf` first tries to RESOLVE a runtime
+    (installed, or a pure-Python bundle exposed through a shim path)."""
+    from .. import protobuf_compat
 
-    `allowed_lateness_ms`: Spark's watermark does NOT filter input
-    rows for arbitrary stateful ops (it only drives state-timeout
-    eviction), so event-time lateness is enforced here — events whose
-    timestamp trails the key's max seen event-time by more than the
-    allowance are dropped, deterministically per key.
+    if not protobuf_compat.ensure_protobuf():
+        raise RuntimeError(
+            "the streaming engine (transformWithStateInPandas) needs "
+            "google.protobuf for its Python state server: install "
+            "protobuf, or set LH_SPARK_PROTOBUF_PATH to a directory "
+            "that contains google/protobuf")
 
-    `native_timers` (requires ProcessingTimeTimeout): the engine fires
-    its own stored timers — matured pending timers are folded as
-    TIMER_EVENTs inside the update function, and a group-state timeout
-    is armed for the earliest immature one, so a SLEEP completes with
-    NO further input (the reference punctuator's "fires with no
-    events" guarantee, SchedulerProcessor.java:56-60, 88-126).  Spark
-    schedules empty micro-batches while processing-time timeouts are
-    pending, which is what makes this self-contained.  Replay/parity
-    paths leave this off: a deterministic replay wants an explicit
-    TIMER_EVENT stream, not wall-clock reads.
 
-    `evict_completed`: once a run reaches COMPLETED and its final
-    snapshot is emitted, replace the state document with a tombstone.
-    Late/duplicate deliveries for the run are dropped (exactly-once
-    preserved) but the store no longer grows with run *history* —
-    only with run *count*, and `tombstone_ttl_ms` (native mode)
-    removes even the marker once the redelivery horizon passes.
-    HALTED runs are NOT evicted: WF_RUN_RESUME_REQUEST must find
-    their full document (fold.py resume semantics).
-    """
+def _export_worker_pythonpath(spark) -> None:
+    """transformWithStateInPandas starts a LONG-LIVED state-server
+    Python process through `StreamingPythonRunner`, which (unlike
+    task workers) does not consult the session's addPyFile includes —
+    its import path comes from the PYTHONPATH in the Python
+    function's captured env (`sc.environment`, snapshotted when the
+    UDF is wrapped).  Export this package's parent dir and, when the
+    protobuf fallback is active, the shim path, BEFORE the UDF is
+    created.  Driver-local paths are fine: the runner lives on the
+    driver node; ordinary executor workers are covered by
+    ship_package/ship_protobuf."""
+    extra = [str(Path(__file__).resolve().parents[2])]
+    try:
+        import google.protobuf as gp
 
-    _emit = emit_ctx_rows
+        extra.append(str(Path(gp.__file__).resolve().parents[2]))
+    except ImportError:
+        pass
+    env = spark.sparkContext.environment
+    parts = [p for p in (env.get("PYTHONPATH") or
+                         os.environ.get("PYTHONPATH", "")).split(os.pathsep)
+             if p]
+    env["PYTHONPATH"] = os.pathsep.join(
+        dict.fromkeys(extra + parts))  # ordered de-dup
 
-    def _fire_matured(wf_run_id: str, state, pending: list, max_offset: int,
-                      now_ms: int, out_rows: list):
-        return fire_matured_timers(spec, executor, wf_run_id, state,
-                                   pending, max_offset, now_ms, out_rows)
 
-    def _store(group_state: GroupState, state, max_offset: int,
-               max_event_ts: int, pending: list, out_rows: list,
-               wf_run_id: str, old_aliases: set | None = None) -> None:
+class WFRunFoldProcessor(StatefulProcessor):
+    """The fold as a transformWithStateInPandas processor.  One
+    instance per state partition; state accessors are per-key
+    (implicit grouping key, as with the reference's processor).
+
+    Engine bookkeeping lives in the `run` value state, NOT inside the
+    WFRun JSON document: the document is the public surface
+    (snapshots, index, lhctl get) and must contain only reference
+    fields.  `max_offset` gives snapshots a monotonic sequence number
+    (latest-wins selection in the query layer); `max_event_ts` drives
+    the lateness bound; `tomb` marks an evicted terminal run (full
+    document dropped, dedupe marker retained).  Pending timers are a
+    `timers` list-state element each (the reference's timer store,
+    SchedulerProcessor.java:56-60), and with `native_timers` each
+    distinct maturation is ONE registered native timer, whose
+    `handleExpiredTimer` callback is the punctuator visit
+    (SchedulerProcessor.java:88-126)."""
+
+    def __init__(self, spec: dict, executor: TaskExecutor | None = None,
+                 allowed_lateness_ms: int | None = None,
+                 native_timers: bool = False,
+                 evict_completed: bool = False,
+                 tombstone_ttl_ms: int | None = None):
+        self.spec = spec
+        self.executor = executor
+        self.allowed_lateness_ms = allowed_lateness_ms
+        self.native_timers = native_timers
+        self.evict_completed = evict_completed
+        self.tombstone_ttl_ms = tombstone_ttl_ms
+
+    # -- state plumbing ----------------------------------------------------
+
+    def init(self, handle: StatefulProcessorHandle) -> None:
+        self.handle = handle
+        self._run = handle.getValueState("run", _RUN_STATE_SCHEMA)
+        self._timers = handle.getListState("timers", _TIMER_STATE_SCHEMA)
+
+    def close(self) -> None:
+        pass
+
+    def _load(self):
+        val = self._run.get()
+        if val is None:
+            return None, 0, 0, 0, []
+        state_json, max_offset, max_event_ts, tomb = val
+        pending = [json.loads(p) for (p,) in self._timers.get()]
+        state = None if tomb else json.loads(state_json)
+        return state, max_offset or 0, max_event_ts or 0, tomb or 0, pending
+
+    def _save(self, state, max_offset: int, max_event_ts: int,
+              pending: list, out_rows: list, wf_run_id: str,
+              old_aliases: set | None) -> None:
         """Emit the per-batch snapshot (S5, SchedulerTopology.java:74-87;
         `seq` = max folded offset, a monotonic per-key version the query
-        layer orders by — file-scan order is NOT write order), then
-        persist state, tombstoning terminal runs when configured.
-
-        `old_aliases`: the run's alias set BEFORE this batch's events —
-        diffed against the new document to emit `kind='index'`
-        CREATE/DELETE changelog rows (ResourceIndexProcessor.java:41-131
-        semantics: the scheduler, which alone sees old+new state,
-        publishes index diffs; downstream compaction is latest-op-wins).
-        Index work per batch is O(changed runs), never O(index).
-        """
+        layer orders by — file-scan order is NOT write order) and its
+        alias-index diff against `old_aliases` (the run's aliases
+        BEFORE this batch — ResourceIndexProcessor.java:41-131: the
+        scheduler, which alone sees old+new state, publishes index
+        diffs), then persist state, register one native timer per new
+        pending maturation, and tombstone terminal runs."""
         if old_aliases is not None:
             index_diff_rows(out_rows, wf_run_id, old_aliases, state, max_offset)
         out_rows.append(snapshot_row(wf_run_id, state, max_offset))
-        if evict_completed and state["status"] == "COMPLETED":
-            # Terminal run: stored timers can no longer change anything
-            # (the fold's stale guards no-op a timer against a terminal
-            # run, same as the reference punctuator firing late), so
-            # any still pending are dropped rather than blocking
-            # eviction — in replay mode (no wheel tick) an unmatured
-            # task-timeout timer would otherwise pin the full document
-            # forever.  One guard, one motion: drop timers + tombstone.
-            group_state.update((_TOMB_STATE, max_offset, max_event_ts,
-                                "[]", 1))
-            if native_timers and tombstone_ttl_ms is not None:
-                group_state.setTimeoutDuration(tombstone_ttl_ms)
+        if self.evict_completed and state["status"] == "COMPLETED":
+            # Terminal run, one guard, one motion: stored timers can no
+            # longer change anything (the fold's stale guards no-op a
+            # timer against a terminal run, same as the reference
+            # punctuator firing late), so drop them rather than let an
+            # unmatured task-timeout pin the full document forever in
+            # replay mode (no timer wheel).  CRITICALLY, also delete
+            # every REGISTERED native timer: this API keeps each
+            # registered expiry alive, and a leftover task-timeout
+            # firing on the tombstoned key would look exactly like the
+            # TTL expiry — wiping the dedupe marker early (with
+            # ttl=None: a PERMANENT marker) and re-opening the run to
+            # redelivered events.
+            self._run.update(("", max_offset, max_event_ts, 1))
+            self._timers.clear()
+            if self.native_timers:
+                for ts in self.handle.listTimers():
+                    self.handle.deleteTimer(ts)
+                if self.tombstone_ttl_ms is not None:
+                    import time as _time
+
+                    self.handle.registerTimer(
+                        int(_time.time() * 1000) + self.tombstone_ttl_ms)
             return
-        _persist_and_arm(group_state, state, max_offset, max_event_ts,
-                         pending)
+        self._run.update((json.dumps(state, separators=(",", ":")),
+                          max_offset, max_event_ts, 0))
+        self._timers.clear()
+        if pending:
+            self._timers.put([(json.dumps(t, separators=(",", ":")),)
+                              for t in pending])
+            if self.native_timers:
+                # Register only NEW maturations: stored timers survive
+                # across invocations in this API (no re-arm dance), and
+                # re-registering an existing expiry must not double it.
+                armed = set(self.handle.listTimers())
+                for ts in {t["maturation_timestamp"] for t in pending}:
+                    if ts not in armed:
+                        self.handle.registerTimer(ts)
 
-    def _persist_and_arm(group_state: GroupState, state, max_offset: int,
-                         max_event_ts: int, pending: list) -> None:
-        """Persist live (non-tombstone) state and re-arm the timer
-        wheel — the ONE place the state tuple shape and the
-        earliest-immature-timer arming live (shared by _store and the
-        spurious-wake path, which must not diverge)."""
-        group_state.update((json.dumps(state, separators=(",", ":")),
-                            max_offset, max_event_ts,
-                            json.dumps(pending, separators=(",", ":")), 0))
-        if native_timers and pending:
-            # Arm for the earliest immature timer.  Processing-time
-            # timeouts are cleared whenever the function runs for the
-            # key, so re-arm on every invocation that leaves timers.
-            next_mat = min(t["maturation_timestamp"] for t in pending)
-            import time as _time
-            delay = max(1, next_mat - int(_time.time() * 1000))
-            group_state.setTimeoutDuration(delay)
+    # -- input path --------------------------------------------------------
 
-    def update(key: tuple, pdf_iter: Iterator[pd.DataFrame],
-               group_state: GroupState) -> Iterator[pd.DataFrame]:
+    def handleInputRows(self, key, rows: Iterator[pd.DataFrame],
+                        timerValues: TimerValues) -> Iterator[pd.DataFrame]:
         import time as _time
 
         (wf_run_id,) = key
-        cols = [f.name for f in OUTPUT_SCHEMA.fields]
-        state = None
-        max_offset = 0
-        max_event_ts = 0
-        pending: list[dict] = []
-        tomb = 0
-        if group_state.exists:
-            (state_json, max_offset, max_event_ts,
-             pending_json, tomb) = group_state.get
-            max_offset = max_offset or 0
-            max_event_ts = max_event_ts or 0
-            tomb = tomb or 0
-            pending = json.loads(pending_json) if pending_json else []
-            if not tomb:
-                state = json.loads(state_json)
-        # Alias set before this invocation's folding — the index diff
-        # base (the fold mutates `state` in place, so capture now).
-        from ..operators.run_index import doc_aliases
-
-        old_aliases = doc_aliases(state)
-
-        if group_state.hasTimedOut:
-            # Timer wheel tick for this key — no input rows.
-            if tomb:
-                group_state.remove()  # redelivery horizon passed
-                yield pd.DataFrame([], columns=cols)
-                return
-            out_rows: list = []
-            now_ms = int(_time.time() * 1000)
-            state, pending, max_offset, fired = _fire_matured(
-                wf_run_id, state, pending, max_offset, now_ms, out_rows)
-            if fired:
-                _store(group_state, state, max_offset, max_event_ts,
-                       pending, out_rows, wf_run_id, old_aliases)
-            elif pending:
-                # Spurious/early wake: just re-persist and re-arm
-                # (shared helper — the state tuple shape must never
-                # fork between this path and _store).
-                _persist_and_arm(group_state, state, max_offset,
-                                 max_event_ts, pending)
-            yield pd.DataFrame(out_rows, columns=cols)
-            return
-
-        events: list[dict] = []
-        for pdf in pdf_iter:
-            events.extend(pdf.to_dict("records"))
-
+        state, max_offset, max_event_ts, tomb, pending = self._load()
         if tomb:
             # Evicted terminal run: every redelivered/late event is
             # dropped — the marker exists precisely to make this safe.
-            if native_timers and tombstone_ttl_ms is not None:
-                group_state.setTimeoutDuration(tombstone_ttl_ms)
-            yield pd.DataFrame([], columns=cols)
+            yield pd.DataFrame([], columns=_COLS)
             return
+        from ..operators.run_index import doc_aliases
 
+        # Alias set before this invocation's folding — the index diff
+        # base (the fold mutates `state` in place, so capture now).
+        old_aliases = doc_aliases(state)
+
+        events: list[dict] = []
+        for pdf in rows:
+            events.extend(pdf.to_dict("records"))
         events, max_offset, max_event_ts = prepare_events(
-            events, max_offset, max_event_ts, allowed_lateness_ms)
+            events, max_offset, max_event_ts, self.allowed_lateness_ms)
 
-        out_rows = []
+        out_rows: list = []
         for ev in events:
             if ev.get("event_type") == "TIMER_EVENT":
                 # Externally-injected firing (TimerPump replay path):
@@ -413,20 +417,54 @@ def make_update_fn(spec: dict, executor: TaskExecutor | None = None,
                     # must be tolerated, not crash the micro-batch
                     # (which would replay and crash forever).
                     pass
-            state, ctx = process_event(spec, state, ev, executor=executor)
-            _emit(out_rows, wf_run_id, ctx, pending)
+            state, ctx = process_event(self.spec, state, ev,
+                                       executor=self.executor)
+            emit_ctx_rows(out_rows, wf_run_id, ctx, pending)
 
-        if state is not None and native_timers:
-            state, pending, max_offset, _ = _fire_matured(
-                wf_run_id, state, pending, max_offset,
-                int(_time.time() * 1000), out_rows)
+        if state is not None and self.native_timers:
+            state, pending, max_offset, _ = fire_matured_timers(
+                self.spec, self.executor, wf_run_id, state, pending,
+                max_offset, int(_time.time() * 1000), out_rows)
 
         if state is not None:
-            _store(group_state, state, max_offset, max_event_ts,
-                   pending, out_rows, wf_run_id, old_aliases)
-        yield pd.DataFrame(out_rows, columns=cols)
+            self._save(state, max_offset, max_event_ts, pending,
+                       out_rows, wf_run_id, old_aliases)
+        yield pd.DataFrame(out_rows, columns=_COLS)
 
-    return update
+    # -- timer path (per-timer callback) -----------------------------------
+
+    def handleExpiredTimer(self, key, timerValues: TimerValues,
+                           expiredTimerInfo: ExpiredTimerInfo,
+                           ) -> Iterator[pd.DataFrame]:
+        (wf_run_id,) = key
+        expiry_ms = expiredTimerInfo.getExpiryTimeInMs()
+        state, max_offset, max_event_ts, tomb, pending = self._load()
+        if tomb:
+            # Only a configured TTL may drop the marker.  _save
+            # deletes all other registered timers at tombstone time,
+            # so an expiry here IS the TTL timer — but older stores
+            # (or a ttl=None config, where the marker is PERMANENT)
+            # can still see a stale task-timeout fire on this key, and
+            # clearing for one of those would break exactly-once.
+            if self.tombstone_ttl_ms is not None:
+                self._run.clear()
+                self._timers.clear()
+            yield pd.DataFrame([], columns=_COLS)
+            return
+        from ..operators.run_index import doc_aliases
+
+        old_aliases = doc_aliases(state)
+        out_rows: list = []
+        state, pending, max_offset, fired = fire_matured_timers(
+            self.spec, self.executor, wf_run_id, state, pending,
+            max_offset, expiry_ms, out_rows)
+        if fired:
+            self._save(state, max_offset, max_event_ts, pending,
+                       out_rows, wf_run_id, old_aliases)
+        # Not fired (early/stale callback): stored timers and their
+        # still-registered native timers are untouched — there is
+        # nothing to re-arm.
+        yield pd.DataFrame(out_rows, columns=_COLS)
 
 
 def streaming_engine(events: DataFrame, spec: dict,
@@ -435,52 +473,58 @@ def streaming_engine(events: DataFrame, spec: dict,
                      allowed_lateness_ms: int | None = None,
                      native_timers: bool = False,
                      evict_completed: bool = False,
-                     tombstone_ttl_ms: int | None = None,
-                     use_tws: bool = False) -> DataFrame:
-    """events (streaming DF, WF_EVENT_SCHEMA) → tagged output stream.
+                     tombstone_ttl_ms: int | None = None) -> DataFrame:
+    """events (streaming DF, WF_EVENT_SCHEMA) → tagged output stream,
+    via `groupBy(wf_run_id).transformWithStateInPandas`.  Start the
+    result through one of this module's starters: the processor's
+    state needs the RocksDB provider they set (`ENGINE_CONFS`).
 
     Late-data bound (SURVEY §2.10): `allowed_lateness_ms` drops
     events trailing the key's max event-time — enforced in the
-    update function because Spark's watermark does not filter input
-    rows for arbitrary stateful ops.  `watermark_delay` additionally
-    declares the watermark on the stream (state-timeout eviction +
-    downstream aggregations); both complement the fold's own
-    stale-result guard for in-window out-of-order arrivals.
+    processor because Spark's watermark does not filter input rows
+    for arbitrary stateful ops.  `watermark_delay` additionally
+    declares the watermark on the stream (downstream aggregations);
+    both complement the fold's own stale-result guard for in-window
+    out-of-order arrivals.
 
-    `use_tws` selects the `transformWithStateInPandas` implementation
-    (`tws.py`: typed state variables + per-timer native callbacks);
-    default stays `applyInPandasWithState`.  Semantics are identical —
-    the twin tests run both.
+    `native_timers`: the engine fires its own stored timers — matured
+    pending timers are folded as TIMER_EVENTs, and each immature one
+    is a registered processing-time timer, so a SLEEP completes with
+    NO further input (the reference punctuator's "fires with no
+    events" guarantee, SchedulerProcessor.java:56-60, 88-126).
+    Replay/parity paths leave this off: a deterministic replay wants
+    an explicit TIMER_EVENT stream, not wall-clock reads.
+
+    `evict_completed`: once a run reaches COMPLETED and its final
+    snapshot is emitted, replace the state document with a tombstone.
+    Late/duplicate deliveries for the run are dropped (exactly-once
+    preserved) but the store no longer grows with run *history* —
+    only with run *count*, and `tombstone_ttl_ms` (native mode)
+    removes even the marker once the redelivery horizon passes.
+    HALTED runs are NOT evicted: WF_RUN_RESUME_REQUEST must find
+    their full document (fold.py resume semantics).
     """
-    if use_tws:
-        from .tws import streaming_engine_tws
-
-        return streaming_engine_tws(
-            events, spec, executor=executor,
-            watermark_delay=watermark_delay,
-            allowed_lateness_ms=allowed_lateness_ms,
-            native_timers=native_timers,
-            evict_completed=evict_completed,
-            tombstone_ttl_ms=tombstone_ttl_ms)
+    from ..protobuf_compat import ship_protobuf
     from ..session import ship_package
 
+    require_protobuf()
     ship_package(events.sparkSession)
+    ship_protobuf(events.sparkSession)
+    _export_worker_pythonpath(events.sparkSession)
     if watermark_delay is not None:
         events = events.withColumn(
             "event_time", F.timestamp_millis(F.col("timestamp"))
         ).withWatermark("event_time", watermark_delay)
-    return events.groupBy("wf_run_id").applyInPandasWithState(
-        make_update_fn(spec, executor, allowed_lateness_ms=allowed_lateness_ms,
-                       native_timers=native_timers,
-                       evict_completed=evict_completed,
-                       tombstone_ttl_ms=tombstone_ttl_ms),
+    processor = WFRunFoldProcessor(
+        spec, executor, allowed_lateness_ms=allowed_lateness_ms,
+        native_timers=native_timers, evict_completed=evict_completed,
+        tombstone_ttl_ms=tombstone_ttl_ms)
+    return events.groupBy("wf_run_id").transformWithStateInPandas(
+        statefulProcessor=processor,
         outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout if native_timers
-                     else GroupStateTimeout.NoTimeout),
+        outputMode="Update",
+        timeMode="ProcessingTime" if native_timers else "None",
     )
-
 
 def split_outputs(tagged: DataFrame) -> dict[str, DataFrame]:
     """S4/S5 split: one tagged stream → per-sink streams (P1/P2)."""
@@ -500,6 +544,17 @@ def split_outputs(tagged: DataFrame) -> dict[str, DataFrame]:
 
 _ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming."
                      "state.RocksDBStateStoreProvider")
+
+# transformWithStateInPandas requires a state store that supports
+# multiple column families (one per typed state variable / timer
+# store) — Spark's RocksDB provider, not the default HDFS-backed one.
+# Fitting: RocksDB is exactly what the reference's stores run on
+# (SURVEY §2.1 S6).
+ENGINE_CONFS = {"spark.sql.streaming.stateStore.providerClass":
+                _ROCKSDB_PROVIDER}
+
+_PROVIDER_RE = re.compile(
+    r'"spark\.sql\.streaming\.stateStore\.providerClass"\s*:\s*"([^"]+)"')
 
 
 # A micro-batch at or under this row count is appended + upserted
@@ -568,17 +623,94 @@ def _upsert_shared_arrow(tbl, serving_dirs: dict[str, str]) -> None:
                                      preserve_index=False), sdir)
 
 
-def _tws_confs(use_tws: bool) -> dict[str, str]:
-    """`transformWithStateInPandas` requires a state store that
-    supports multiple column families (one per typed state variable /
-    timer store) — Spark's RocksDB provider, not the default
-    HDFS-backed one.  Fitting: RocksDB is exactly what the
-    reference's stores run on (SURVEY §2.1 S6).  The provider class
-    is read at query START, so callers scope it around `.start()`."""
-    if not use_tws:
-        return {}
-    return {"spark.sql.streaming.stateStore.providerClass":
-            _ROCKSDB_PROVIDER}
+def refuse_legacy_checkpoint(checkpoint_dir: str) -> None:
+    """Refuse, before `.start()`, a checkpoint this engine cannot
+    resume.  Every committed offsets file records the session conf its
+    batch ran under, including the state-store provider class.  Older
+    releases could run the fold on `applyInPandasWithState` over the
+    default HDFS-backed provider; resuming such a checkpoint would
+    start and then die inside the query
+    (UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_FAMILIES).  A
+    checkpoint without committed offsets is fresh and passes."""
+    offsets = Path(checkpoint_dir) / "offsets"
+
+    # Offsets filenames are batch ids; sort NUMERICALLY so batch 10
+    # outranks batch 9 (lexicographic order would scan '9' first once
+    # ids pass one digit).  Non-numeric names sort FIRST so
+    # `reversed(files)` reads genuinely newest-batch-first — a stray
+    # non-numeric file must never shadow the newest batch's provider
+    # record; Spark batch ids are always numeric.
+    def _batch_key(p: Path):
+        try:
+            return (1, int(p.name), p.name)
+        except ValueError:
+            return (0, 0, p.name)
+
+    try:
+        files = sorted((p for p in offsets.iterdir()
+                        if p.is_file() and not p.name.startswith(".")),
+                       key=_batch_key)
+    except OSError:
+        return
+    if not files:
+        return
+    provider = "none recorded"
+    for path in reversed(files):
+        try:
+            m = _PROVIDER_RE.search(path.read_text())
+        except OSError:
+            continue
+        if m:
+            provider = m.group(1)
+            break
+    if not provider.endswith("RocksDBStateStoreProvider"):
+        raise RuntimeError(
+            f"checkpoint {checkpoint_dir} was written by the "
+            f"applyInPandasWithState engine of an older release (state "
+            f"store provider: {provider}); this engine runs "
+            f"transformWithStateInPandas on {_ROCKSDB_PROVIDER} and "
+            f"cannot resume it — move the directory aside to start from "
+            f"a fresh checkpoint")
+
+
+def _read_events(spark: SparkSession, events_dir: str,
+                 max_files_per_trigger: int | None) -> DataFrame:
+    from ..engine.batch import WF_EVENT_SCHEMA
+
+    reader = spark.readStream.schema(WF_EVENT_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger",
+                               str(max_files_per_trigger))
+    return reader.parquet(events_dir)
+
+
+def _start_query(spark: SparkSession, tagged: DataFrame, sink,
+                 checkpoint_dir: str, trigger: dict,
+                 state_partitions: int | None = None):
+    """Start `tagged` into the foreachBatch `sink` — the one door every
+    starter uses.  It refuses a legacy checkpoint, then scopes the
+    engine confs around `.start()` (both are read at query START, and
+    the session defaults are restored after): the RocksDB provider
+    (`ENGINE_CONFS`) and, when given, `state_partitions` as the
+    state-store fanout.  Stamps `_lh_fresh_start` (see
+    await_read_your_writes)."""
+    from ..session import scoped_conf
+
+    refuse_legacy_checkpoint(checkpoint_dir)
+    confs = dict(ENGINE_CONFS)
+    if state_partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
+    fresh = _fresh_checkpoint(checkpoint_dir)
+    with scoped_conf(spark, confs):
+        q = (
+            tagged.writeStream.foreachBatch(sink)
+            .outputMode("update")
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(**trigger)
+            .start()
+        )
+    q._lh_fresh_start = fresh
+    return q
 
 
 def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
@@ -589,7 +721,6 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
                      evict_completed: bool = True,
                      tombstone_ttl_ms: int | None = None,
                      serving_dir: str | None = None,
-                     use_tws: bool = False,
                      state_partitions: int | None = None,
                      max_files_per_trigger: int | None = None):
     """Start the engine as a continuously-running query (ProcessingTime
@@ -627,20 +758,11 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
     order is preserved, so a live command still queues behind
     remaining backlog files; for row-granular pacing that keeps new
     runs at idle-grade latency, wrap the bulk import in
-    `streaming.admission.CatchUpAdmission` instead (source-side, so
-    it applies identically to the tws engine)."""
-    from ..engine.batch import WF_EVENT_SCHEMA
-
-    reader = spark.readStream.schema(WF_EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    events = reader.parquet(events_dir)
-    tagged = streaming_engine(events, spec, executor=executor,
-                              native_timers=native_timers,
-                              evict_completed=evict_completed,
-                              tombstone_ttl_ms=tombstone_ttl_ms,
-                              use_tws=use_tws)
+    `streaming.admission.CatchUpAdmission` instead (source-side)."""
+    tagged = streaming_engine(
+        _read_events(spark, events_dir, max_files_per_trigger), spec,
+        executor=executor, native_timers=native_timers,
+        evict_completed=evict_completed, tombstone_ttl_ms=tombstone_ttl_ms)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # ONE count materializes the batch into the cache and gates
@@ -683,22 +805,9 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
             # copy per attempt into executor storage memory.
             batch_df.unpersist()
 
-    from ..session import scoped_conf
-
-    confs = _tws_confs(use_tws)
-    if state_partitions is not None:
-        confs = {**confs,
-                 "spark.sql.shuffle.partitions": str(state_partitions)}
-    fresh = _fresh_checkpoint(checkpoint_dir)
-    with scoped_conf(spark, confs):
-        q = (
-            tagged.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .start()
-        )
-    q._lh_fresh_start = fresh  # see await_read_your_writes
+    q = _start_query(spark, tagged, sink, checkpoint_dir,
+                     {"processingTime": f"{trigger_seconds} seconds"},
+                     state_partitions)
     q._lh_capped_admission = max_files_per_trigger is not None
     return q
 
@@ -720,7 +829,6 @@ def start_continuous_shared(spark: SparkSession, events_dir: str,
                             output_dir: str, serving_dirs: dict[str, str],
                             executor: TaskExecutor | None = None,
                             trigger_seconds: float = 0.5,
-                            use_tws: bool = False,
                             state_partitions: int | None = None,
                             max_files_per_trigger: int | None = None):
     """ONE engine for ALL deployed specs (SURVEY §7 ops profile: 100
@@ -743,20 +851,15 @@ def start_continuous_shared(spark: SparkSession, events_dir: str,
     count); at 100s of specs you would instead add a spec partition
     column to the store root — same motion, one pass.
     """
-    from ..engine.batch import WF_EVENT_SCHEMA
     from ..engine.fold import make_spec_registry
 
-    registry = make_spec_registry(specs)
-    reader = spark.readStream.schema(WF_EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        # Coarse catch-up admission cap — see start_continuous; the
-        # row-granular pacer is streaming.admission.CatchUpAdmission.
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    events = reader.parquet(events_dir)
-    tagged = streaming_engine(events, registry, executor=executor,
-                              native_timers=True, evict_completed=True,
-                              use_tws=use_tws)
+    # `max_files_per_trigger`: the coarse catch-up admission cap — see
+    # start_continuous; the row-granular pacer is
+    # streaming.admission.CatchUpAdmission.
+    tagged = streaming_engine(
+        _read_events(spark, events_dir, max_files_per_trigger),
+        make_spec_registry(specs), executor=executor,
+        native_timers=True, evict_completed=True)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         from ..sinks.serving import upsert_serving_stores
@@ -804,22 +907,9 @@ def start_continuous_shared(spark: SparkSession, events_dir: str,
                 attributed.unpersist()
             batch_df.unpersist()
 
-    from ..session import scoped_conf
-
-    confs = _tws_confs(use_tws)
-    if state_partitions is not None:
-        confs = {**confs,
-                 "spark.sql.shuffle.partitions": str(state_partitions)}
-    fresh = _fresh_checkpoint(checkpoint_dir)
-    with scoped_conf(spark, confs):
-        q = (
-            tagged.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .start()
-        )
-    q._lh_fresh_start = fresh  # see await_read_your_writes
+    q = _start_query(spark, tagged, sink, checkpoint_dir,
+                     {"processingTime": f"{trigger_seconds} seconds"},
+                     state_partitions)
     q._lh_capped_admission = max_files_per_trigger is not None
     return q
 
@@ -906,8 +996,8 @@ def run_streaming_availablenow(spark: SparkSession, events_dir: str, spec: dict,
                                executor: TaskExecutor | None = None,
                                max_files_per_trigger: int | None = None,
                                evict_completed: bool = False,
-                               shuffle_partitions: int | None = None,
-                               use_tws: bool = False) -> DataFrame:
+                               shuffle_partitions: int | None = None
+                               ) -> DataFrame:
     """Run the engine over a parquet directory of events with an
     Available-Now trigger, appending tagged outputs to `output_dir`
     via foreachBatch (fault-tolerant: the checkpoint is recoverable,
@@ -928,36 +1018,20 @@ def run_streaming_availablenow(spark: SparkSession, events_dir: str, spec: dict,
     replay on the session's 32 analytic partitions pays 32x that for
     nothing.  Scoped to this query; the session default is restored.
     """
-    from ..engine.batch import WF_EVENT_SCHEMA
-    from ..session import scoped_conf
+    tagged = streaming_engine(
+        _read_events(spark, events_dir, max_files_per_trigger), spec,
+        executor=executor, evict_completed=evict_completed)
 
-    confs = ({"spark.sql.shuffle.partitions": str(shuffle_partitions)}
-             if shuffle_partitions is not None else {})
-    confs.update(_tws_confs(use_tws))
-    with scoped_conf(spark, confs):
-        reader = spark.readStream.schema(WF_EVENT_SCHEMA)
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        events = reader.parquet(events_dir)
-        tagged = streaming_engine(events, spec, executor=executor,
-                                  evict_completed=evict_completed,
-                                  use_tws=use_tws)
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("append").parquet(output_dir)
 
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(output_dir)
-
-        q = (
-            tagged.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            # A truncated replay must be an ERROR, not a silently
-            # short output a parity gate would misread as data drift.
-            q.stop()
-            raise TimeoutError(
-                "availableNow replay did not finish within 300s; "
-                "output would be truncated")
+    q = _start_query(spark, tagged, sink, checkpoint_dir,
+                     {"availableNow": True}, shuffle_partitions)
+    if not q.awaitTermination(300):
+        # A truncated replay must be an ERROR, not a silently
+        # short output a parity gate would misread as data drift.
+        q.stop()
+        raise TimeoutError(
+            "availableNow replay did not finish within 300s; "
+            "output would be truncated")
     return spark.read.parquet(output_dir)

@@ -1,15 +1,20 @@
-"""Unit tests for `pin_engine` — the checkpoint/engine compatibility
-pin shared by the manager's deploy paths and `cli.py cmd_process`
-(ADVICE r10: the process verb used to resume pre-flip pandas-state
-checkpoints with the tws default, which Spark rejects)."""
+"""Unit tests for `refuse_legacy_checkpoint` — the check every engine
+starter (the manager's deploy paths, `cli.py cmd_process`) runs
+before `.start()`.  A checkpoint an older release wrote with the
+applyInPandasWithState engine records the HDFS-backed state-store
+provider in its offsets; resuming it on transformWithStateInPandas
+would only fail inside the started query
+(UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_FAMILIES)."""
 from __future__ import annotations
 
 import json
+import re
 from pathlib import Path
 
-from old_original_java_little_horse_spark.api.engines import (
-    detect_checkpoint_engine,
-    pin_engine,
+import pytest
+
+from old_original_java_little_horse_spark.streaming.engine import (
+    refuse_legacy_checkpoint,
 )
 
 _HDFS_OFFSETS = (
@@ -25,48 +30,69 @@ def _mk_offsets(ckpt: Path, txt: str = _HDFS_OFFSETS):
     (ckpt / "offsets" / "0").write_text(txt)
 
 
+def _refused(ckpt: Path) -> bool:
+    try:
+        refuse_legacy_checkpoint(str(ckpt))
+    except RuntimeError as e:
+        assert str(ckpt) in str(e)  # the error names the directory
+        return True
+    return False
+
+
 def test_fresh_checkpoint_takes_default_and_stamps_marker(tmp_path):
+    """A fresh checkpoint starts on the one engine there is.  Nothing
+    is stamped beside it any more: the check only reads, so it neither
+    creates the directory nor writes an `engine.json` marker."""
     ckpt = tmp_path / "ckpt"
-    assert pin_engine(ckpt, default_tws=True) is True
-    assert json.loads((ckpt / "engine.json").read_text())["engine"] == "tws"
-    # The marker now outranks any different default.
-    assert pin_engine(ckpt, default_tws=False) is True
+    assert not _refused(ckpt)
+    assert not ckpt.exists()
+    ckpt.mkdir()
+    assert not _refused(ckpt)
+    assert list(ckpt.iterdir()) == []
 
 
 def test_markerless_committed_checkpoint_pins_pandas_state(tmp_path):
+    """A committed checkpoint without a marker whose offsets record the
+    HDFS-backed provider was written by the applyInPandasWithState
+    engine.  That engine is gone, so the checkpoint is no longer pinned
+    to it but refused: the error names the provider it found, and no
+    marker is written."""
     ckpt = tmp_path / "ckpt"
     _mk_offsets(ckpt)
-    assert pin_engine(ckpt, default_tws=True) is False
-    assert json.loads((ckpt / "engine.json").read_text())["engine"] == "pandas-state"
+    with pytest.raises(RuntimeError, match="HDFSBackedStateStoreProvider"):
+        refuse_legacy_checkpoint(str(ckpt))
+    assert not (ckpt / "engine.json").exists()
 
 
 def test_markerless_tws_checkpoint_detected_from_offsets(tmp_path):
-    """An r10-era `cli process` tws checkpoint has committed offsets
-    and NO marker — the providerClass Spark recorded in them must pin
-    it back to tws even when the caller asks for pandas-state."""
+    """A checkpoint whose offsets record the RocksDB provider resumes —
+    whatever an older release's `engine.json` marker beside it says:
+    the offsets are Spark's own record and the only one read."""
     ckpt = tmp_path / "ckpt"
     _mk_offsets(ckpt, _ROCKSDB_OFFSETS)
-    assert detect_checkpoint_engine(ckpt) is True
-    assert pin_engine(ckpt, default_tws=False) is True
-    assert json.loads((ckpt / "engine.json").read_text())["engine"] == "tws"
+    (ckpt / "engine.json").write_text(json.dumps({"engine": "pandas-state"}))
+    assert not _refused(ckpt)
 
 
 def test_detection_tristate(tmp_path):
-    assert detect_checkpoint_engine(tmp_path / "none") is None  # fresh
+    assert not _refused(tmp_path / "none")  # fresh: no checkpoint yet
+    empty = tmp_path / "empty"
+    (empty / "offsets").mkdir(parents=True)
+    assert not _refused(empty)  # fresh: no committed offsets
     hdfs = tmp_path / "hdfs"
     _mk_offsets(hdfs)
-    assert detect_checkpoint_engine(hdfs) is False
+    assert _refused(hdfs)
     legacy = tmp_path / "legacy"
     _mk_offsets(legacy, "{}")  # offsets without a provider record
-    assert detect_checkpoint_engine(legacy) is False
+    assert _refused(legacy)
 
 
 def test_detection_reads_newest_offsets_numerically(tmp_path):
-    """ADVICE r11: offsets filenames are batch ids; lexicographic
-    order scans '9' before '10'.  Detection must read the genuinely
-    newest committed batch first — pinned here by making only batch 12
-    carry a provider record and planting a conflicting record in an
-    older batch."""
+    """Offsets filenames are batch ids; lexicographic order scans '9'
+    before '10'.  The check must read the genuinely newest committed
+    batch first — pinned here by making only batch 12 carry the
+    RocksDB record and planting a conflicting record in older
+    batches."""
     ckpt = tmp_path / "ckpt"
     (ckpt / "offsets").mkdir(parents=True)
     # batches 2 and 9 say HDFS; only the newest (12) says RocksDB — a
@@ -75,97 +101,71 @@ def test_detection_reads_newest_offsets_numerically(tmp_path):
     (ckpt / "offsets" / "2").write_text(_HDFS_OFFSETS)
     (ckpt / "offsets" / "9").write_text(_HDFS_OFFSETS)
     (ckpt / "offsets" / "12").write_text(_ROCKSDB_OFFSETS)
-    assert detect_checkpoint_engine(ckpt) is True
+    assert not _refused(ckpt)
     # provider-less newest batch falls through to the next-newest
     (ckpt / "offsets" / "13").write_text("v1\n{}\n{}\n")
-    assert detect_checkpoint_engine(ckpt) is True
-    # non-numeric names don't crash detection
+    assert not _refused(ckpt)
+    # non-numeric names don't crash the check
     (ckpt / "offsets" / "metadata-ish").write_text("v1\n{}\n{}\n")
-    assert detect_checkpoint_engine(ckpt) is True
-    # ADVICE r12: a stray non-numeric file CARRYING a provider record
-    # must not shadow the newest numeric batch — non-numeric names
-    # sort before every batch id, so batch 12's RocksDB record wins.
+    assert not _refused(ckpt)
+    # a stray non-numeric file CARRYING a provider record must not
+    # shadow the newest numeric batch — non-numeric names sort before
+    # every batch id, so batch 12's RocksDB record wins.
     (ckpt / "offsets" / "zz-stray").write_text(_HDFS_OFFSETS)
-    assert detect_checkpoint_engine(ckpt) is True
+    assert not _refused(ckpt)
+    # ...and the converse: a newest HDFS batch is refused.
+    (ckpt / "offsets" / "14").write_text(_HDFS_OFFSETS)
+    assert _refused(ckpt)
 
 
-def test_custom_marker_location(tmp_path):
-    root = tmp_path / "root"
-    ckpt = root / "ckpt"
-    assert pin_engine(ckpt, default_tws=True, marker=root / "engine.json") is True
-    assert json.loads((root / "engine.json").read_text())["engine"] == "tws"
-    assert not (ckpt / "engine.json").exists()
-
-
-def test_unwritable_marker_is_benign_and_self_heals(tmp_path, monkeypatch):
-    """A lost marker is recoverable: the offsets record re-derives the
-    engine next boot, so a failed marker write must not fail the
-    deploy — and the later detection must return the TRUE engine."""
-    ckpt = tmp_path / "ckpt"
-    _mk_offsets(ckpt, _ROCKSDB_OFFSETS)
-
-    def boom(self, *a, **k):
-        raise OSError("read-only fs")
-
-    monkeypatch.setattr(Path, "write_text", boom)
-    assert pin_engine(ckpt, default_tws=False) is True  # detected tws
-    monkeypatch.undo()
-    assert not (ckpt / "engine.json").exists()
-    # next boot: no marker, offsets present -> detection heals the pin
-    assert pin_engine(ckpt, default_tws=False) is True
-    assert json.loads((ckpt / "engine.json").read_text())["engine"] == "tws"
-
-
-def test_marker_write_is_atomic(tmp_path):
-    ckpt = tmp_path / "ckpt"
-    pin_engine(ckpt, default_tws=True)
-    # no orphan temp file left beside the marker
-    assert [p.name for p in ckpt.iterdir() if "tmp" in p.name] == []
-
-
-def test_corrupt_marker_falls_back_to_detection(tmp_path):
-    ckpt = tmp_path / "ckpt"
-    _mk_offsets(ckpt)
-    (ckpt / "engine.json").write_text("{not json")
-    assert pin_engine(ckpt, default_tws=True) is False
-
-
-def test_cmd_process_resumes_checkpoints_on_their_engine(spark, tmp_path, monkeypatch):
-    """The process verb must pass the PINNED engine, not its default."""
+def test_cmd_process_refuses_legacy_checkpoint(spark, tmp_path, monkeypatch):
+    """The process verb refuses a legacy checkpoint before its query
+    starts, naming the directory."""
     from old_original_java_little_horse_spark import cli
 
     ckpt = tmp_path / "ckpt"
-    _mk_offsets(ckpt)  # pre-flip pandas-state checkpoint, no marker
+    _mk_offsets(ckpt)  # applyInPandasWithState-era checkpoint
     events = tmp_path / "events"
     events.mkdir()
     spec_file = tmp_path / "spec.json"
     spec_file.write_text(json.dumps({"name": "s", "thread_specs": {}}))
-
-    seen = {}
-
-    def fake_run(spark, events_glob, spec, **kw):
-        seen.update(kw)
-
-        class _DF:
-            def where(self, *_a):
-                return self
-
-            def count(self):
-                return 0
-
-        return _DF()
-
-    monkeypatch.setattr(cli, "_spark", lambda: None)
-    monkeypatch.setattr(
-        "old_original_java_little_horse_spark.streaming.engine.run_streaming_availablenow",
-        fake_run)
-    import pyspark.sql.functions  # noqa: F401  (imported inside cmd_process)
+    monkeypatch.setattr(cli, "_spark", lambda: spark)
 
     args = type("A", (), {
         "spec": str(spec_file), "events_dir": str(events),
         "snapshots_dir": str(tmp_path / "snaps"),
         "checkpoint_dir": str(ckpt), "executor": None,
-        "engine": "tws", "tws": False,
     })()
-    assert cli.cmd_process(args) == 0
-    assert seen["use_tws"] is False  # pinned, despite the tws default
+    active = len(spark.streams.active)
+    with pytest.raises(RuntimeError, match=re.escape(str(ckpt))):
+        cli.cmd_process(args)
+    assert len(spark.streams.active) == active  # nothing was started
+
+
+def test_missing_protobuf_fails_at_start(spark, tmp_path, monkeypatch):
+    """Without a resolvable protobuf runtime the manager and `cli
+    process` fail at start, naming the override variable — not on
+    the first deploy, inside Spark's Python runner."""
+    from old_original_java_little_horse_spark import cli, protobuf_compat
+    from old_original_java_little_horse_spark.api.engines import (
+        SparkEngineManager,
+    )
+
+    monkeypatch.setattr(protobuf_compat, "ensure_protobuf", lambda: False)
+    with pytest.raises(RuntimeError, match="LH_SPARK_PROTOBUF_PATH"):
+        SparkEngineManager(spark, str(tmp_path / "engines"))
+
+    spec_file = tmp_path / "spec.json"
+    spec_file.write_text(json.dumps({"name": "s", "thread_specs": {}}))
+
+    def no_spark():
+        raise AssertionError("Spark started before the runtime check")
+
+    monkeypatch.setattr(cli, "_spark", no_spark)
+    args = type("A", (), {
+        "spec": str(spec_file), "events_dir": str(tmp_path / "events"),
+        "snapshots_dir": str(tmp_path / "snaps"),
+        "checkpoint_dir": str(tmp_path / "ckpt"), "executor": None,
+    })()
+    with pytest.raises(RuntimeError, match="LH_SPARK_PROTOBUF_PATH"):
+        cli.cmd_process(args)

@@ -17,13 +17,5 @@ def test_harness_subset_passes(spark):
     assert rc == 0
 
 
-def test_harness_tws_engine(spark):
-    """--tws runs the embedded server's engines on the
-    transformWithStateInPandas runtime; one task-chain case pins the
-    flag end-to-end (the full 15-case tws sweep is the CLI's job)."""
-    rc = main(["test", "basic", "--tws"])
-    assert rc == 0
-
-
 def test_unknown_case_rejected():
     assert main(["test", "not-a-case"]) == 2

@@ -1,14 +1,12 @@
-"""transformWithStateInPandas engine (`streaming/tws.py`).
+"""The streaming engine's transformWithStateInPandas processor
+(`streaming/engine.py: WFRunFoldProcessor`).
 
-The TWS Python worker needs `google.protobuf` (its state-server
-protocol); `protobuf_compat.ensure_protobuf` resolves a pure-Python
-runtime from the host where none is installed, so the full streaming
-twins RUN here — they still gate on `tws_runtime_available()` for
-hosts where no runtime can be found (like the Kafka broker tests).
-The processor's SEMANTICS are additionally proven everywhere via a
-fake StatefulProcessorHandle driving `handleInputRows` /
-`handleExpiredTimer` directly: same fold, same outputs, same state
-transitions as the applyInPandasWithState engine."""
+The processor's SEMANTICS are proven without Spark via a fake
+StatefulProcessorHandle driving `handleInputRows` /
+`handleExpiredTimer` directly, against the sequential fold
+(`engine.fold.process_event`) as the reference; the streaming tests
+at the end run it under the real runtime (RocksDB state store,
+native timers)."""
 
 from __future__ import annotations
 
@@ -18,15 +16,17 @@ import tempfile
 from pathlib import Path
 
 import pandas as pd
-import pytest
 
 from old_original_java_little_horse_spark.engine.batch import WF_EVENT_SCHEMA
 from old_original_java_little_horse_spark.engine.batch_queries import (
     pipeline_executor, pipeline_spec,
 )
+from old_original_java_little_horse_spark.engine.fold import process_event
+from old_original_java_little_horse_spark.operators.run_index import doc_aliases
 from old_original_java_little_horse_spark.sdk.builder import Workflow
-from old_original_java_little_horse_spark.streaming.tws import (
-    WFRunFoldProcessor, tws_runtime_available,
+from old_original_java_little_horse_spark.streaming.engine import (
+    WFRunFoldProcessor, emit_ctx_rows, index_diff_rows, prepare_events,
+    snapshot_row,
 )
 
 
@@ -112,38 +112,48 @@ def _start_event(run_id: str, variables: dict, offset: int = 0,
             "content": json.dumps({"variables": variables})}
 
 
+def _sequential_rows(spec, key: str, batches: list[list[dict]],
+                     executor=None) -> list[dict]:
+    """The reference output for a micro-batch slicing: every event
+    folded in order by `process_event` on ONE in-memory document (no
+    state store, no JSON round-trip between batches), with a
+    snapshot (and its alias-index diff) closing each batch that
+    leaves a run.  A batch that leaves no run persists nothing, so
+    its offsets do not advance the key's `seq`."""
+    state, max_offset, max_ts, rows = None, 0, 0, []
+    for batch in batches:
+        before = doc_aliases(state)
+        events, max_offset, max_ts = prepare_events(
+            [dict(e) for e in batch], max_offset, max_ts, None)
+        for ev in events:
+            state, ctx = process_event(spec, state, ev, executor=executor)
+            emit_ctx_rows(rows, key, ctx, [])
+        if state is None:
+            max_offset, max_ts = 0, 0
+        else:
+            index_diff_rows(rows, key, before, state, max_offset)
+            rows.append(snapshot_row(key, state, max_offset))
+    return rows
+
+
 def test_fold_lifecycle_matches_apds_semantics():
     """Full inline-executor run through the processor == the same
-    events through the applyInPandasWithState update fn (state doc,
-    snapshot seq, output kinds)."""
-    from pyspark.sql.streaming.state import GroupState  # noqa: F401
-    from old_original_java_little_horse_spark.streaming.engine import (
-        make_update_fn,
-    )
-
+    events folded sequentially by `process_event` (state doc,
+    snapshot seq, output kinds) — the per-batch semantics the retired
+    applyInPandasWithState engine also had to meet."""
     events = [_start_event("r1", {"n_purch": 2, "n_click": 5})]
 
     proc = WFRunFoldProcessor(pipeline_spec(), executor=pipeline_executor)
     proc.init(FakeHandle())
     tws_rows = _drive(proc, "r1", events)
-
-    # Twin: the old engine's update fn with a minimal GroupState fake.
-    class FakeGroupState:
-        exists = False
-        hasTimedOut = False
-
-        def update(self, v):
-            self.v = v
-
-    update = make_update_fn(pipeline_spec(), pipeline_executor)
-    apds_rows = []
-    for res in update(("r1",), iter([pd.DataFrame(events)]), FakeGroupState()):
-        apds_rows.extend(res.to_dict("records"))
+    ref_rows = _sequential_rows(pipeline_spec(), "r1", [events],
+                                executor=pipeline_executor)
 
     def snap(rows):
         return [(r["seq"], r["payload"]) for r in rows if r["kind"] == "snapshot"]
 
-    assert snap(tws_rows) == snap(apds_rows)
+    assert [r["kind"] for r in tws_rows] == [r["kind"] for r in ref_rows]
+    assert snap(tws_rows) == snap(ref_rows)
     state = json.loads(snap(tws_rows)[0][1])
     assert state["status"] == "COMPLETED"
     assert state["thread_runs"][0]["variables"]["score"] == 2 * 2 + 5 + 7
@@ -235,12 +245,8 @@ def test_stale_timer_callback_is_noop():
     assert handle.states["run"].get() == before
 
 
-@pytest.mark.skipif(not tws_runtime_available(),
-                    reason="google.protobuf not installed — TWS Python "
-                           "state server cannot start in this sandbox")
 def test_tws_streaming_twin_matches_batch(spark):
-    """Full Structured Streaming run under transformWithStateInPandas
-    (runs only where protobuf exists)."""
+    """Full Structured Streaming run under transformWithStateInPandas."""
     from old_original_java_little_horse_spark.streaming.engine import (
         run_streaming_availablenow,
     )
@@ -257,7 +263,7 @@ def test_tws_streaming_twin_matches_batch(spark):
             spark, str(events_dir) + "/*", pipeline_spec(),
             checkpoint_dir=str(workdir / "ckpt"),
             output_dir=str(workdir / "out"),
-            executor=pipeline_executor, use_tws=True)
+            executor=pipeline_executor)
         snaps = [r for r in tagged.collect() if r["kind"] == "snapshot"]
         assert len(snaps) == 1 and snaps[0]["status"] == "COMPLETED"
         state = json.loads(snaps[0]["payload"])
@@ -266,9 +272,6 @@ def test_tws_streaming_twin_matches_batch(spark):
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-@pytest.mark.skipif(not tws_runtime_available(),
-                    reason="no google.protobuf runtime resolvable — TWS "
-                           "Python state server cannot start on this host")
 def test_tws_native_timer_fires_live(spark):
     """ST2 under the REAL tws runtime: a stored SLEEP's WFRunTimer is
     armed as ONE native timer (`handle.registerTimer`) and
@@ -294,7 +297,7 @@ def test_tws_native_timer_fires_live(spark):
     q = start_continuous(
         spark, str(events_dir) + "/*", spec,
         checkpoint_dir=str(workdir / "ckpt"), output_dir=str(out_dir),
-        trigger_seconds=0.2, use_tws=True,
+        trigger_seconds=0.2,
     )
     try:
         now = int(time.time() * 1000)
@@ -331,43 +334,20 @@ def test_tws_native_timer_fires_live(spark):
 # ---------------------------------------------------------------------------
 
 def test_engines_agree_on_random_interleavings_and_batchings():
-    """The two stateful engines (applyInPandasWithState update fn vs
-    the tws processor) must emit IDENTICAL output-row streams for any
-    event interleaving AND any micro-batch slicing of it — the
-    runtime twin (`engine_streaming_fold_tws`) proves one scenario
-    end-to-end; this fuzzes the semantic surface across the fold
-    property pool (garbage events, duplicates, interrupts, stops,
-    retries, timers)."""
+    """The streaming processor must emit EXACTLY the pure fold
+    engine's sequential output-row stream (`_sequential_rows`) for
+    any event interleaving AND any micro-batch slicing of it — state
+    persisted through the typed state variables between batches must
+    be indistinguishable from one in-memory document.  Fuzzes the
+    semantic surface across the fold property pool (garbage events,
+    duplicates, interrupts, stops, retries, timers);
+    `engine_streaming_fold` proves one scenario end-to-end under the
+    real runtime."""
     import copy
 
     from hypothesis import given, settings, strategies as st
 
-    from old_original_java_little_horse_spark.streaming.engine import (
-        make_update_fn,
-    )
     from .test_fold_properties import SPEC, event_pool
-
-    class FakeGroupState:
-        def __init__(self):
-            self._v = None
-            self.hasTimedOut = False
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-        def remove(self):
-            self._v = None
-
-        def setTimeoutDuration(self, ms):
-            pass
 
     @settings(max_examples=75, deadline=None)
     @given(st.data())
@@ -391,23 +371,21 @@ def test_engines_agree_on_random_interleavings_and_batchings():
                 batches.append(seq[lo:c])
                 lo = c
 
-        update = make_update_fn(SPEC, evict_completed=False)
-        gs = FakeGroupState()
-        apds_rows: list[dict] = []
         proc = WFRunFoldProcessor(SPEC, evict_completed=False)
         proc.init(FakeHandle())
         tws_rows: list[dict] = []
         for batch in batches:
             pdf = pd.DataFrame(batch)
-            for res in update(("r1",), iter([pdf.copy()]), gs):
-                apds_rows.extend(res.to_dict("records"))
-            for res in proc.handleInputRows(("r1",), iter([pdf.copy()]), None):
+            for res in proc.handleInputRows(("r1",), iter([pdf]), None):
                 tws_rows.extend(res.to_dict("records"))
+
         def norm(rows):
             # pandas NaN (float cols) != NaN under dict equality
             return [{k: (None if isinstance(v, float) and v != v else v)
                      for k, v in r.items()} for r in rows]
 
-        assert norm(tws_rows) == norm(apds_rows)
+        ref_rows = _sequential_rows(
+            SPEC, "r1", [pd.DataFrame(b).to_dict("records") for b in batches])
+        assert norm(tws_rows) == norm(ref_rows)
 
     run()

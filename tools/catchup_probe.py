@@ -21,7 +21,7 @@ Per cell it records:
   the whole remaining batch, the number admission control deletes.
 
     python tools/catchup_probe.py [--n 200000] [--caps 20000 50000]
-        [--headline-n 1000000 --headline-cap 50000] [--tws] [--out F]
+        [--headline-n 1000000 --headline-cap 50000] [--out F]
 """
 from __future__ import annotations
 
@@ -95,7 +95,7 @@ def _percentiles(xs: list[float]) -> dict:
 
 
 def probe_cell(spark, n: int, cap: int | None,
-               state_partitions: int = 8, use_tws: bool = False,
+               state_partitions: int = 8,
                trigger_seconds: float = 0.5) -> dict:
     """One (backlog-size, cap) cell.  cap=None is the uncapped
     contrast: backlog as one visible file, single mid-drain probe."""
@@ -117,8 +117,7 @@ def probe_cell(spark, n: int, cap: int | None,
         serving_dirs={spec["name"]: os.path.join(workdir, "serving")},
         executor=execute,
         trigger_seconds=trigger_seconds,
-        state_partitions=state_partitions,
-        use_tws=use_tws)
+        state_partitions=state_partitions)
     adm = CatchUpAdmission(events_dir, query=q,
                            max_rows_per_trigger=cap or 10**12)
     try:
@@ -204,7 +203,6 @@ def main() -> None:
                     help="optional big-N run at --headline-cap only")
     ap.add_argument("--headline-cap", type=int, default=50_000)
     ap.add_argument("--parts", type=int, default=8)
-    ap.add_argument("--tws", action="store_true")
     ap.add_argument("--skip-uncapped", action="store_true")
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
@@ -220,12 +218,10 @@ def main() -> None:
             with open(args.out, "w") as f:
                 f.write(json.dumps({
                     "metric": "catchup_admission_probe",
-                    "engine": "tws" if args.tws else "applyInPandasWithState",
                     "cells": cells}) + "\n")
 
     def run(n, cap):
-        r = probe_cell(spark, n, cap, state_partitions=args.parts,
-                       use_tws=args.tws)
+        r = probe_cell(spark, n, cap, state_partitions=args.parts)
         print(f"  N={n} cap={cap}: drain {r['drain_wall_s']}s, "
               f"idle p50 {r['idle_rt_ms']['p50']}ms, catch-up p50 "
               f"{r['catchup_rt_ms']['p50']}ms "
@@ -245,7 +241,6 @@ def main() -> None:
 
     print(json.dumps({
         "metric": "catchup_admission_probe",
-        "engine": "tws" if args.tws else "applyInPandasWithState",
         "cells": cells}))
 
 

@@ -39,7 +39,7 @@ EXCLUDE = {
     "d_dup_clusters", "d_dedup_canonical", "d_dup_cluster_stats",
     "sim_dup_clusters", "g_pagerank_purchases", "g_cc_star_clusters",
     "g_triangle_count", "t_bpe_encode", "t_bpe_merges",
-    "engine_streaming_fold", "engine_streaming_fold_tws",
+    "engine_streaming_fold",
     "engine_index_incremental",
     "s3_serving_store_upsert", "s5_serving_store_gc",
 }
