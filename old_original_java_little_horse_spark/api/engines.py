@@ -18,7 +18,6 @@ the process-isolated variant; here tasks run inline in the fold like
 
 from __future__ import annotations
 
-import shutil
 import threading
 from dataclasses import dataclass
 from pathlib import Path
@@ -36,49 +35,32 @@ class EngineHandle:
 
 
 class SparkEngineManager:
-    """Deploys/undeploys one continuous engine per WFSpec name.
-
-    `shared=True` selects the consolidated ops profile (SURVEY §7):
-    ONE continuous query serves every deployed spec through the
-    fold's multi-spec registry (`fold.make_spec_registry`) — one
-    checkpoint and one state store instead of N, while serving
-    stores stay per spec so the HTTP read paths are unchanged.  A
-    deploy/undeploy restarts the shared query over the same
-    checkpoint; Structured Streaming resumes offsets + state, so
-    in-flight runs of other specs carry on.
-
-    Shared-mode contracts: (1) run ids share ONE keyspace across
-    specs (the reference namespaces them per spec topic; the HTTP
-    API's GUID default satisfies this — don't reuse a caller-chosen
-    run_id across specs).  (2) A (re)deploy stops the old query
-    before starting the new one — two queries may not share a
-    checkpoint — so commands against OTHER specs see the same brief
-    restart window a per-spec redeploy has for its own spec;
-    `_engine_for_run`'s handle revalidation re-resolves them after.
-    (3) `undeploy(purge=True)` cannot delete a spec's run state from
-    the shared checkpoint — see `undeploy` for the consequences.
+    """Deploys/undeploys one continuous engine per WFSpec name — one
+    query, checkpoint and state store per spec, like the reference's
+    one scheduler topology per WFSpec (`Scheduler.java:29-47`).
 
     Construction fails when the engine's protobuf runtime cannot be
-    resolved, and a deploy over a checkpoint an older release wrote
-    with the applyInPandasWithState engine raises before its query
-    starts (`streaming.engine.refuse_legacy_checkpoint`).
+    resolved or when `base_dir` still holds the in-flight runs of a
+    retired single-query-for-all-specs deployment
+    (`_refuse_shared_root`), and a deploy over a checkpoint an older
+    release wrote with the applyInPandasWithState engine raises before
+    its query starts (`streaming.engine.refuse_legacy_checkpoint`).
     """
 
     def __init__(self, spark, base_dir: str,
                  executor: TaskExecutor | None = None,
                  trigger_seconds: float = 0.2,
                  barrier_timeout: float = 60.0,
-                 shared: bool = False,
                  state_partitions: int | None = 4):
         from ..streaming.engine import require_protobuf
 
         require_protobuf()  # fail at boot, not on the first deploy
         self.spark = spark
         self.base_dir = Path(base_dir)
+        _refuse_shared_root(self.base_dir)
         self.executor = executor
         self.trigger_seconds = trigger_seconds
         self.barrier_timeout = barrier_timeout
-        self.shared = shared
         # Engine state-store fanout (see start_continuous docstring):
         # every state partition costs a store commit + an Arrow
         # round-trip per micro-batch even idle, and that batch
@@ -92,50 +74,12 @@ class SparkEngineManager:
         # (2.9 s vs 7.4 s) — or pass None for the session conf.
         self.state_partitions = state_partitions
         self._engines: dict[str, EngineHandle] = {}
-        self._specs: dict[str, dict] = {}  # shared mode: deployed specs
         # Serializes deploy/undeploy: metadata.post() calls on_change
         # OUTSIDE its own lock, so two concurrent POST /wfSpec handler
-        # threads reach deploy() together — un-serialized, the shared
-        # mode would start TWO streaming queries over the one shared
-        # checkpoint (corruption Spark forbids), and per-spec mode
-        # could leak a never-stopped query for the same name.  RLock:
-        # deploy/undeploy call _shared_restart internally.
+        # threads reach deploy() together — un-serialized, two deploys
+        # of one name could leak a never-stopped query.  RLock:
+        # stop_all calls undeploy under it.
         self._lock = threading.RLock()
-
-    # -- shared-mode plumbing ------------------------------------------------
-
-    def _shared_restart(self) -> None:
-        """(Re)start the single shared query over all deployed specs."""
-        from ..streaming.engine import start_continuous_shared
-
-        for h in self._engines.values():
-            if h.query is not None:
-                h.query.stop()
-        self._engines.clear()
-        if not self._specs:
-            return
-        root = self.base_dir / "_shared"
-        events_dir = root / "events"
-        events_dir.mkdir(parents=True, exist_ok=True)
-        serving_dirs = {name: str(self.base_dir / name / "serving")
-                        for name in self._specs}
-        query = start_continuous_shared(
-            self.spark, str(events_dir) + "/*", list(self._specs.values()),
-            checkpoint_dir=str(root / "ckpt"),
-            output_dir=str(root / "out"),
-            serving_dirs=serving_dirs,
-            executor=self.executor,
-            trigger_seconds=self.trigger_seconds,
-            state_partitions=self.state_partitions,
-        )
-        for name, spec in self._specs.items():
-            self._engines[name] = EngineHandle(
-                spec=spec,
-                events_dir=str(events_dir),
-                output_dir=str(root / "out"),
-                serving_dir=serving_dirs[name],
-                query=query,
-            )
 
     def deploy(self, spec: dict) -> EngineHandle:
         """Start (or restart, on spec update) the spec's engine."""
@@ -143,14 +87,6 @@ class SparkEngineManager:
 
         name = spec["name"]
         with self._lock:
-            if self.shared:
-                # Direct (non-HTTP) callers may pass specs without the
-                # metadata-stamped id; the registry needs one to pin runs.
-                spec = dict(spec)
-                spec.setdefault("id", name)
-                self._specs[name] = spec
-                self._shared_restart()
-                return self._engines[name]
             old = self._engines.pop(name, None)
             if old is not None:
                 old.query.stop()
@@ -175,48 +111,13 @@ class SparkEngineManager:
             self._engines[name] = handle
             return handle
 
-    def deploy_many(self, specs: list[dict]) -> list[EngineHandle]:
-        """Deploy a batch of specs — the boot-recovery path.  In
-        shared mode this is ONE query restart for the whole batch
-        instead of N sequential stop/recover/start cycles (each of
-        which replays the checkpoint)."""
-        if not specs:
-            return []
+    def undeploy(self, name: str) -> None:
+        """Stop serving `name`; its directories stay on disk, so a
+        later deploy of the same name resumes its checkpoint."""
         with self._lock:
-            if self.shared:
-                for spec in specs:
-                    spec = dict(spec)
-                    spec.setdefault("id", spec["name"])
-                    self._specs[spec["name"]] = spec
-                self._shared_restart()
-                return [self._engines[s["name"]] for s in specs]
-            return [self.deploy(s) for s in specs]
-
-    def undeploy(self, name: str, purge: bool = False) -> None:
-        """Stop serving `name`.  `purge` removes the spec's
-        SERVING/metadata directory; in shared mode the run STATE
-        (snapshots folded into the shared checkpoint, tombstones,
-        pending timers) necessarily survives — it lives in the one
-        shared state store, where per-spec deletion isn't expressible.
-        Consequences, documented as shared-mode contract #3: a later
-        spec of the same name inherits old runs' tombstones (reused
-        run ids are dropped as duplicates — GUID run ids make this
-        moot) and a still-pending timer for an old run can fold a
-        fresh snapshot into the new deployment's serving store.  The
-        per-spec mode's purge removes checkpoint and state wholesale."""
-        with self._lock:
-            if self.shared:
-                if self._specs.pop(name, None) is not None:
-                    self._shared_restart()  # remaining specs carry on
-                    if purge:
-                        shutil.rmtree(self.base_dir / name,
-                                      ignore_errors=True)
-                return
             handle = self._engines.pop(name, None)
             if handle is not None:
                 handle.query.stop()
-                if purge:
-                    shutil.rmtree(self.base_dir / name, ignore_errors=True)
 
     def get(self, name: str) -> EngineHandle | None:
         return self._engines.get(name)  # single dict read: GIL-atomic
@@ -229,9 +130,27 @@ class SparkEngineManager:
 
     def stop_all(self) -> None:
         with self._lock:
-            if self.shared:
-                self._specs.clear()
-                self._shared_restart()  # no specs left → stops the query
-                return
             for name in list(self._engines):
                 self.undeploy(name)
+
+
+def _refuse_shared_root(base_dir: Path) -> None:
+    """Refuse an engines root where the single query for all specs of
+    older releases (their `serve` shared mode) left committed work
+    under `_shared/ckpt`.  Its in-flight runs live in that one
+    checkpoint; the per-spec engines never resume it, so each later
+    event for such a run would be dropped as an event for an unknown
+    run and the run stranded without an error.  An empty or
+    offsets-free `_shared` directory passes; a spec named `_shared`
+    would own the same path and is refused alike."""
+    ckpt = base_dir / "_shared" / "ckpt"
+    try:
+        committed = any(p.is_file() and not p.name.startswith(".")
+                        for p in (ckpt / "offsets").iterdir())
+    except OSError:
+        return
+    if committed:
+        raise RuntimeError(
+            f"checkpoint {ckpt} was written by the shared all-specs "
+            f"engine of an older release; the per-spec engines do not "
+            f"resume its runs — move the directory aside to boot")

@@ -110,9 +110,8 @@ class LittleHorseAPI:
         # Orders metadata on_change actions per (kind, name); see
         # _meta_change.  One lock PER name: the gate must be atomic
         # with the action for a given name, but a taskDef deploy must
-        # not serialize behind another name's minutes-long shared-mode
-        # engine restart (ADVICE r10).  The outer lock only guards the
-        # lock/seq dicts.
+        # not serialize behind another name's engine restart
+        # (ADVICE r10).  The outer lock only guards the lock/seq dicts.
         self._meta_change_lock = threading.Lock()
         self._meta_change_locks: dict[tuple[str, str | None], threading.Lock] = {}
         self._meta_change_seq: dict[tuple[str, str | None], int] = {}
@@ -125,10 +124,10 @@ class LittleHorseAPI:
             # engine is not running (the reference restarts each spec's
             # topology from its store on startup) — their checkpoints
             # and serving stores resume where the last process left
-            # off.  Batched: in shared mode this is ONE query restart
-            # for all stored specs, not N stop/recover/start cycles.
-            engines.deploy_many([doc for doc in metadata.get_all("wfSpec")
-                                 if engines.get(doc["name"]) is None])
+            # off.
+            for doc in metadata.get_all("wfSpec"):
+                if engines.get(doc["name"]) is None:
+                    engines.deploy(doc)
         if metadata is not None and task_deployer is not None:
             # Same recovery for TaskDef worker deployments: stored
             # TaskDefs get their workers back on boot (deploy is

@@ -490,13 +490,7 @@ def cmd_work(args) -> int:
     polls are skipped on the task-run attempt key), and appends the
     started/ended TASK_EVENTs to the engine's event-topic dir, where
     the continuous query folds them.  With a Kafka transport the same
-    loop consumes the TaskDef topic instead (`sources/kafka.py`).
-
-    Against `serve --shared` the engine dirs collapse to
-    engines/_shared (auto-detected); run ONE worker per TaskDef
-    total — the worker serves that TaskDef for every spec, and a
-    second worker on the same TaskDef would contend for the shared
-    work checkpoint."""
+    loop consumes the TaskDef topic instead (`sources/kafka.py`)."""
     import importlib
 
     import pyspark.sql.functions as F
@@ -508,26 +502,14 @@ def cmd_work(args) -> int:
     mod_name, _, attr = args.executor.partition(":")
     fn = getattr(importlib.import_module(mod_name), attr)
     spark = _spark()
-    # `serve --shared` runs ONE engine for all specs: the tagged output
-    # and event topic live under engines/_shared.  Poll EVERY root that
-    # exists — not per-spec-else-shared — so a deployment migrated from
-    # per-spec to --shared (the stale per-spec dir still on disk) does
-    # not leave the worker tailing a dir the live engine never writes.
-    # Existence is re-checked each poll: either shape may appear later.
-    # The TaskDef filter below scopes this worker's rows, and posted
-    # TASK_EVENTs resolve their spec through the run's pinned id — so
-    # per root the only difference is the directory.
-    candidate_roots = [Path(args.base_dir) / "engines" / args.spec,
-                       Path(args.base_dir) / "engines" / "_shared"]
-    # The idempotency ledger is durable and SHARED ACROSS ROOTS (one
-    # file per TaskDef): after a per-spec → --shared migration the
-    # shared engine replays schedule rows the per-spec deployment
-    # already executed, and a fresh worker process would otherwise
-    # re-run them once per root.  Residual contract: at-least-once
-    # per attempt key — duplicate windows are (a) a crash between
-    # user-function return and the ledger append, and (b) while TWO
-    # worker processes overlap (old per-spec + new --shared), up to
-    # one poll interval between reload_seen() calls.
+    root = Path(args.base_dir) / "engines" / args.spec
+    # The idempotency ledger is durable and keyed by TaskDef, not by
+    # spec: workers for different specs that share a TaskDef share one
+    # ledger file.  Residual contract: at-least-once per attempt key —
+    # duplicate windows are (a) a crash between user-function return
+    # and the ledger append, and (b) while two worker processes on
+    # one ledger overlap, up to one poll interval between
+    # reload_seen() calls.
     seen_dir = Path(args.base_dir) / "engines" / "worker-seen"
     seen_dir.mkdir(parents=True, exist_ok=True)
     worker = TaskWorker({args.task_def: fn},
@@ -536,34 +518,34 @@ def cmd_work(args) -> int:
     deadline = (time.time() + args.max_seconds) if args.max_seconds else None
     n_done = 0
 
-    def make_batch_fn(events_dir: Path):
-        def execute_batch(batch_df, _batch_id):
-            nonlocal n_done
-            rows = (batch_df
-                    .where((F.col("kind") == "task_schedule")
-                           & (F.col("task_def_name") == args.task_def))
-                    .select("payload").collect())
-            def publish(evs):
-                # Inside handle(): events reach the event topic BEFORE
-                # the "done" ledger append, so "done" implies the
-                # engine can fold the result.  A crash mid-write
-                # leaves the attempt in-doubt → re-executed.
-                for ev in evs:
-                    _write_event(spark, str(events_dir), ev)
+    events_dir, out_dir = str(root / "events"), root / "out"
 
-            for r in rows:
-                tsr = json.loads(r["payload"])
-                evs = worker.handle(tsr, int(time.time() * 1000),
-                                    time.time_ns() // 1000, publish=publish)
-                if evs:
-                    n_done += 1
-                    print(f"executed {tsr['task_def_name']} for "
-                          f"{tsr['wf_run_id']} pos {tsr['task_run_position']}")
-        return execute_batch
+    def execute_batch(batch_df, _batch_id):
+        nonlocal n_done
+        rows = (batch_df
+                .where((F.col("kind") == "task_schedule")
+                       & (F.col("task_def_name") == args.task_def))
+                .select("payload").collect())
+        def publish(evs):
+            # Inside handle(): events reach the event topic BEFORE the
+            # "done" ledger append, so "done" implies the engine can
+            # fold the result.  A crash mid-write leaves the attempt
+            # in-doubt → re-executed.
+            for ev in evs:
+                _write_event(spark, events_dir, ev)
+
+        for r in rows:
+            tsr = json.loads(r["payload"])
+            evs = worker.handle(tsr, int(time.time() * 1000),
+                                time.time_ns() // 1000, publish=publish)
+            if evs:
+                n_done += 1
+                print(f"executed {tsr['task_def_name']} for "
+                      f"{tsr['wf_run_id']} pos {tsr['task_run_position']}")
 
     while True:
         # Pick up attempt keys another worker process appended since
-        # our last poll (migration overlap, multi-root tailing) —
+        # our last poll (another spec's worker on the same TaskDef) —
         # narrows the cross-process duplicate window to one poll.
         worker.reload_seen()
         if worker.detected_in_doubt:
@@ -576,18 +558,15 @@ def cmd_work(args) -> int:
                       "(predecessor crashed mid-attempt; at-least-once "
                       "fallback)", file=sys.stderr)
             worker.detected_in_doubt.clear()
-        for root in candidate_roots:
-            out_dir = root / "out"
-            if not any(out_dir.rglob("*.parquet")):
-                continue
-            # The worker keeps its OWN streaming checkpoint (per root)
-            # over the engine's tagged output: each poll is an
-            # availableNow run that reads only files not yet consumed —
-            # O(new schedule rows) per poll, never a rescan of the
-            # engine's full history (the consumer-group offset of the
-            # Kafka variant, in file-source form).
+        if any(out_dir.rglob("*.parquet")):
+            # The worker keeps its OWN streaming checkpoint over the
+            # engine's tagged output: each poll is an availableNow run
+            # that reads only files not yet consumed — O(new schedule
+            # rows) per poll, never a rescan of the engine's full
+            # history (the consumer-group offset of the Kafka variant,
+            # in file-source form).
             (spark.readStream.schema(OUTPUT_SCHEMA).parquet(str(out_dir))
-             .writeStream.foreachBatch(make_batch_fn(root / "events"))
+             .writeStream.foreachBatch(execute_batch)
              .option("checkpointLocation",
                      str(root / "work-ckpt" / args.task_def))
              .trigger(availableNow=True).start().awaitTermination())
@@ -621,25 +600,11 @@ def cmd_serve(args) -> int:
         mod_name, _, attr = args.executor.partition(":")
         executor = getattr(importlib.import_module(mod_name), attr)
 
-    # Trigger/partition profile.  The measured defaults (200 ms x
-    # parts=4) are the serving optimum of tools/latency_sweep.py;
-    # --latency-profile is the sweep's 100 ms x parts=4 cell (~150 ms
-    # better round-trip p50 for ~2x idle checkpoint commits — for
-    # latency-critical deployments that accept the idle-commit cost),
-    # and --state-partitions exposes the backfill knob (32 drained a
-    # 50k-run backlog 4.3x faster than 4 at +0.8 s barrier in
-    # tools/engine_scale_probe.py).  Explicit flags beat the profile.
-    trigger_ms = args.trigger_ms
-    if trigger_ms is None:
-        trigger_ms = 100 if args.latency_profile else 200
-    parts = args.state_partitions if args.state_partitions is not None else 4
-
     spark = _spark()
     base = Path(args.base_dir)
     mgr = SparkEngineManager(spark, str(base / "engines"), executor=executor,
-                             shared=bool(getattr(args, "shared", False)),
-                             trigger_seconds=trigger_ms / 1000.0,
-                             state_partitions=parts)
+                             trigger_seconds=args.trigger_ms / 1000.0,
+                             state_partitions=args.state_partitions)
     api = LittleHorseAPI(spark, metadata=MetadataStore(str(base / "meta")),
                          engines=mgr)
     srv = LittleHorseHTTPServer(api, host=args.host, port=args.port).start()
@@ -821,18 +786,12 @@ def main(argv: list[str] | None = None) -> int:
     sv.add_argument("--host", default="127.0.0.1")
     sv.add_argument("--port", type=int, default=0)
     sv.add_argument("--executor", help="module.path:function for inline tasks")
-    sv.add_argument("--shared", action="store_true",
-                    help="one shared engine for all specs (one checkpoint/"
-                         "state store; per-spec serving stores)")
-    sv.add_argument("--latency-profile", action="store_true",
-                    help="latency-critical preset: 100 ms trigger x 4 "
-                         "state partitions (~150 ms better task "
-                         "round-trip p50 for ~2x idle checkpoint "
-                         "commits; measured in tools/latency_sweep.py)")
-    sv.add_argument("--trigger-ms", type=int, default=None,
+    sv.add_argument("--trigger-ms", type=int, default=200,
                     help="micro-batch trigger interval (default 200; "
-                         "overrides --latency-profile)")
-    sv.add_argument("--state-partitions", type=int, default=None,
+                         "tools/latency_sweep.py: 100 ms cuts task "
+                         "round-trip p50 by ~150 ms for ~2x idle "
+                         "checkpoint commits)")
+    sv.add_argument("--state-partitions", type=int, default=4,
                     help="state-store shuffle partitions (default 4 = "
                          "serving optimum; 32 drains big backlogs "
                          "~4x faster at +0.8 s barrier)")

@@ -1354,36 +1354,6 @@ mode (SURVEY §2.11: inline tasks) so a run is a pure function of its
 WF_RUN_STARTED event."""
 
 
-def make_spec_registry(specs: list[dict]) -> dict:
-    """Multi-spec registry addressable by spec id AND name.
-
-    The reference deploys one scheduler app per WFSpec
-    (`Scheduler.java:29-47`); this engine runs every spec in one
-    stream — a run pins its spec version at start (`wfSpecDigest`,
-    WFRun.java:45) and later events resolve through the pinned id.
-    """
-    reg: dict = {"__multi__": True}
-    for s in specs:
-        reg[s["id"]] = s
-        reg.setdefault(s["name"], s)
-    return reg
-
-
-def resolve_spec(spec_or_registry: dict, state: dict | None, event: dict) -> dict | None:
-    """Single spec passes through; a registry resolves via the run's
-    pinned spec id (state) or the event's spec id/name."""
-    if "thread_specs" in spec_or_registry:
-        return spec_or_registry
-    for key in (
-        (state or {}).get("wf_spec_id"),
-        event.get("wf_spec_id"),
-        event.get("wf_spec_name"),
-    ):
-        if key and key in spec_or_registry:
-            return spec_or_registry[key]
-    return None
-
-
 def process_event(spec: dict, state: dict | None, event: dict,
                   executor: TaskExecutor | None = None) -> tuple[dict | None, Ctx]:
     """One scheduler step: fold a single event into run state and
@@ -1391,16 +1361,8 @@ def process_event(spec: dict, state: dict | None, event: dict,
 
     With `executor` set, scheduled tasks are executed inline and their
     started/ended events folded immediately (drained to quiescence) —
-    the deterministic batch mode used for oracle parity.
-
-    `spec` may also be a `make_spec_registry` dict — the multi-spec
-    engine: the run resolves its pinned spec; events naming an unknown
-    spec are dropped."""
+    the deterministic batch mode used for oracle parity."""
     ctx = Ctx()
-    resolved = resolve_spec(spec, state, event)
-    if resolved is None:
-        return state, ctx  # unknown spec: drop
-    spec = resolved
     try:
         if event["event_type"] == "WF_RUN_STARTED":
             if state is not None:

@@ -31,16 +31,14 @@ class TaskWorker:
     `seen_path` (optional) makes the idempotency ledger durable: a
     "started" intent line appended before the user function runs and a
     "done" line after the result events exist, loaded at startup.  A
-    worker restarted against replayed schedule rows — or tailing
-    MULTIPLE engine roots after a per-spec → `--shared` migration,
-    where the shared engine re-emits rows the per-spec deployment
-    already executed — then skips everything already done.  A crash
-    between user-function return and the "done" append (the window
-    Kafka's transactional variant closes with its offset+event commit,
-    `TaskWorker.java:102-142`) leaves the key *in-doubt*: the restart
-    re-executes (at-least-once is the documented fallback) but records
-    the detection in `detected_in_doubt` instead of silently treating
-    the attempt as never started."""
+    worker restarted against replayed schedule rows then skips
+    everything already done.  A crash between user-function return
+    and the "done" append (the window Kafka's transactional variant
+    closes with its offset+event commit, `TaskWorker.java:102-142`)
+    leaves the key *in-doubt*: the restart re-executes (at-least-once
+    is the documented fallback) but records the detection in
+    `detected_in_doubt` instead of silently treating the attempt as
+    never started."""
 
     def __init__(self, tasks: dict[str, TaskFn], worker_id: str = "pyworker-1",
                  seen_path: str | None = None):
@@ -56,9 +54,9 @@ class TaskWorker:
     def reload_seen(self) -> None:
         """Fold any ledger lines appended since the last read into the
         in-memory sets (incremental: resumes at the last byte offset).
-        Called at startup and — when another process may share the
-        ledger, e.g. both engine roots during a per-spec → --shared
-        migration — once per poll by `cli.cmd_work`, which shrinks the
+        Called at startup and — since the ledger is keyed by TaskDef,
+        so workers for different specs that share a TaskDef share one
+        file — once per poll by `cli.cmd_work`, which shrinks the
         cross-process duplicate window from the whole overlap period
         to one poll interval.  Concurrent executions WITHIN a poll are
         still possible: at-least-once per attempt key is the

@@ -304,8 +304,7 @@ def _read_bucket_dir(spark: SparkSession, store_dir: str, rel: str,
 # replays blow past the threshold and take the distributed path; both
 # paths write byte-compatible stores (parity-pinned in
 # tests/test_serving_store.py).
-_FASTPATH_MAX_ROWS = int(os.environ.get("LH_SPARK_SERVING_FASTPATH_ROWS",
-                                        "5000"))
+_FASTPATH_MAX_ROWS = 5000
 
 # The arrow fast path merges each touched bucket's FULL committed
 # contents on the driver, and bucket size grows with the store
@@ -314,8 +313,7 @@ _FASTPATH_MAX_ROWS = int(os.environ.get("LH_SPARK_SERVING_FASTPATH_ROWS",
 # Gate on the ON-DISK bytes of the touched buckets (cheap os.scandir
 # over the manifest's committed dirs) and keep big merges distributed,
 # where executors own the per-bucket work (ADVICE r8).
-_FASTPATH_MAX_BYTES = int(os.environ.get("LH_SPARK_SERVING_FASTPATH_BYTES",
-                                         str(64 * 1024 * 1024)))
+_FASTPATH_MAX_BYTES = 64 * 1024 * 1024
 
 # Reader grace for superseded generation directories (see _commit):
 # a dereferenced dir survives at least this long before GC so an

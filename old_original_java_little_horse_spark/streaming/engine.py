@@ -562,7 +562,7 @@ _PROVIDER_RE = re.compile(
 # sink): live serving emits a handful of rows per trigger, and each
 # extra Spark job there is ~0.15-0.4 s of scheduler overhead on the
 # command-latency path.  Backfills blow past it and stay distributed.
-_SMALL_BATCH_ROWS = int(os.environ.get("LH_SPARK_SMALL_BATCH_ROWS", "5000"))
+_SMALL_BATCH_ROWS = 5000
 
 
 def _append_output_arrow(tbl, output_dir: str) -> None:
@@ -595,32 +595,6 @@ def _append_output_arrow(tbl, output_dir: str) -> None:
         os.fsync(dfd)
     finally:
         os.close(dfd)
-
-
-def _upsert_shared_arrow(tbl, serving_dirs: dict[str, str]) -> None:
-    """Driver-side twin of the shared sink's attribution + per-spec
-    upsert for a collected small batch: each row joins to its run's
-    spec via the batch's own snapshot payloads (the update fn emits a
-    snapshot row in every invocation that emits index rows, so every
-    serving-relevant run has one in-batch)."""
-    import pyarrow as pa
-
-    from ..sinks.serving import upsert_serving_stores_arrow
-
-    # ArrowDtype keeps nullable int64 columns (seq is null on
-    # task_schedule/timer rows) from degrading to float64, which
-    # would write DOUBLE seq into an int64 store.
-    pdf = tbl.to_pandas(types_mapper=pd.ArrowDtype)
-    snaps = pdf[pdf["kind"] == "snapshot"]
-    run_spec = {r: json.loads(p).get("wf_spec_name")
-                for r, p in zip(snaps["wf_run_id"], snaps["payload"])}
-    specs = pdf["wf_run_id"].map(run_spec.get)
-    for name in sorted({s for s in specs if s is not None}):
-        sdir = serving_dirs.get(name)
-        if sdir is not None:
-            upsert_serving_stores_arrow(
-                pa.Table.from_pandas(pdf[specs == name],
-                                     preserve_index=False), sdir)
 
 
 def refuse_legacy_checkpoint(checkpoint_dir: str) -> None:
@@ -822,96 +796,6 @@ def _fresh_checkpoint(checkpoint_dir: str) -> bool:
         return not os.listdir(os.path.join(checkpoint_dir, "offsets"))
     except FileNotFoundError:
         return True
-
-
-def start_continuous_shared(spark: SparkSession, events_dir: str,
-                            specs: list[dict], checkpoint_dir: str,
-                            output_dir: str, serving_dirs: dict[str, str],
-                            executor: TaskExecutor | None = None,
-                            trigger_seconds: float = 0.5,
-                            state_partitions: int | None = None,
-                            max_files_per_trigger: int | None = None):
-    """ONE engine for ALL deployed specs (SURVEY §7 ops profile: 100
-    specs should not need 100 checkpoints/state stores).
-
-    The reference deploys one scheduler app per WFSpec
-    (`Scheduler.java:29-47`); this is the consolidated alternative the
-    fold already supports: the update function receives a
-    `make_spec_registry` dict and each run resolves its pinned spec
-    per event (`fold.resolve_spec`).  One events directory (the shared
-    event topic — rows carry `wf_spec_name`), one checkpoint, one
-    state store; serving stays PER SPEC.
-
-    Per-spec serving routing: the update fn emits a snapshot row in
-    every invocation that emits index rows (`_store`), and the
-    snapshot payload carries `wf_spec_name` — so a broadcast join of
-    the batch against its own snapshot rows attributes every serving
-    row to its spec without widening OUTPUT_SCHEMA.  The driver loop
-    is over specs PRESENT IN THE BATCH (bounded by deployed-spec
-    count); at 100s of specs you would instead add a spec partition
-    column to the store root — same motion, one pass.
-    """
-    from ..engine.fold import make_spec_registry
-
-    # `max_files_per_trigger`: the coarse catch-up admission cap — see
-    # start_continuous; the row-granular pacer is
-    # streaming.admission.CatchUpAdmission.
-    tagged = streaming_engine(
-        _read_events(spark, events_dir, max_files_per_trigger),
-        make_spec_registry(specs), executor=executor,
-        native_timers=True, evict_completed=True)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..sinks.serving import upsert_serving_stores
-
-        batch_df.persist()
-        attributed = None
-        try:
-            # Idle-trigger short-circuit — same rationale as the
-            # per-spec sink above (batch 0 stamps the output schema).
-            cnt = batch_df.count()
-            if cnt == 0 and batch_id > 0:
-                return
-            if 0 < cnt <= _SMALL_BATCH_ROWS:
-                # Small live batch: one collection, then append +
-                # per-spec attribution + upserts driver-side (the
-                # per-spec sink's motion; attribution joins each row
-                # to its run's snapshot-payload wf_spec_name).
-                tbl = batch_df.toArrow()
-                _append_output_arrow(tbl, output_dir)
-                _upsert_shared_arrow(tbl, serving_dirs)
-                return
-            batch_df.write.mode("append").parquet(output_dir)
-            run_spec = (
-                batch_df.where(F.col("kind") == "snapshot")
-                .select("wf_run_id",
-                        F.get_json_object("payload", "$.wf_spec_name")
-                        .alias("_spec"))
-                .distinct())
-            attributed = (batch_df
-                          .join(F.broadcast(run_spec), "wf_run_id", "left")
-                          .persist())
-            present = [r["_spec"] for r in
-                       attributed.select("_spec").distinct().collect()
-                       if r["_spec"] is not None]
-            for name in present:
-                sdir = serving_dirs.get(name)
-                if sdir is not None:
-                    upsert_serving_stores(
-                        attributed.where(F.col("_spec") == name)
-                        .drop("_spec"), sdir)
-        finally:
-            # A failed upsert re-enters on retry; the finally keeps
-            # each attempt from leaking two cached copies of the batch.
-            if attributed is not None:
-                attributed.unpersist()
-            batch_df.unpersist()
-
-    q = _start_query(spark, tagged, sink, checkpoint_dir,
-                     {"processingTime": f"{trigger_seconds} seconds"},
-                     state_partitions)
-    q._lh_capped_admission = max_files_per_trigger is not None
-    return q
 
 
 def await_read_your_writes(query, timeout: float = 60.0) -> None:

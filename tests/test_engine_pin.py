@@ -4,7 +4,9 @@ before `.start()`.  A checkpoint an older release wrote with the
 applyInPandasWithState engine records the HDFS-backed state-store
 provider in its offsets; resuming it on transformWithStateInPandas
 would only fail inside the started query
-(UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_FAMILIES)."""
+(UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_FAMILIES).  Also the
+engine manager's boot refusal of an engines root that still holds the
+shared all-specs checkpoint of an older release."""
 from __future__ import annotations
 
 import json
@@ -169,3 +171,27 @@ def test_missing_protobuf_fails_at_start(spark, tmp_path, monkeypatch):
     })()
     with pytest.raises(RuntimeError, match="LH_SPARK_PROTOBUF_PATH"):
         cli.cmd_process(args)
+
+
+def test_manager_refuses_leftover_shared_root(tmp_path):
+    """An engines root where an older release's single query for all
+    specs committed work under `_shared/ckpt` is refused at manager
+    construction: the per-spec engines would never resume those runs,
+    and each later event for one would be dropped as an event for an
+    unknown run.  An empty `_shared` directory (or one without
+    committed offsets) passes."""
+    from old_original_java_little_horse_spark.api.engines import (
+        SparkEngineManager,
+    )
+
+    root = tmp_path / "engines"
+    (root / "_shared").mkdir(parents=True)
+    SparkEngineManager(spark=None, base_dir=str(root))
+    (root / "_shared" / "ckpt" / "offsets").mkdir(parents=True)
+    SparkEngineManager(spark=None, base_dir=str(root))
+
+    ckpt = root / "_shared" / "ckpt"
+    (ckpt / "offsets" / "0").write_text(_ROCKSDB_OFFSETS)
+    with pytest.raises(RuntimeError, match=re.escape(str(ckpt))) as e:
+        SparkEngineManager(spark=None, base_dir=str(root))
+    assert "not resume" in str(e.value)

@@ -141,10 +141,7 @@ def test_meta_change_drops_stale_out_of_order_event():
         def deploy(self, spec):
             self.deploys.append(spec["id"])
 
-        def deploy_many(self, specs):
-            return [self.deploy(s) for s in specs]
-
-        def undeploy(self, name, purge=False):
+        def undeploy(self, name):
             self.undeploys.append(name)
 
         def get(self, name):
@@ -179,10 +176,7 @@ def test_late_rename_cannot_clobber_recreated_old_name():
         def deploy(self, spec):
             self.deploys.append((spec["name"], spec["id"]))
 
-        def deploy_many(self, specs):
-            return []
-
-        def undeploy(self, name, purge=False):
+        def undeploy(self, name):
             self.undeploys.append(name)
 
         def get(self, name):
@@ -267,10 +261,7 @@ def test_meta_change_does_not_serialize_across_names():
             deploy_started.set()
             assert release_deploy.wait(10), "test deadlock"
 
-        def deploy_many(self, specs):
-            return []
-
-        def undeploy(self, name, purge=False):
+        def undeploy(self, name):
             pass
 
         def get(self, name):
@@ -443,7 +434,7 @@ def test_http_metadata_deploy_run_query(spark):
     """The harness flow HTTP-only: POST taskDef/externalEventDef/wfSpec
     (deploying two specs, each with its own engine) → POST /wfrun on
     both → GETs resolve from the compacted serving stores; DELETE
-    undeploys."""
+    undeploys one spec while the other keeps folding."""
     workdir = Path(tempfile.mkdtemp(prefix="http-meta-"))
     store = MetadataStore(str(workdir / "meta"))
     mgr = SparkEngineManager(spark, str(workdir / "engines"),
@@ -512,6 +503,16 @@ def test_http_metadata_deploy_run_query(spark):
         assert mgr.get("doubler") is None
         st, _ = _req(port, "POST", "/wfrun", {"wf_spec_name": "doubler"})
         assert st == 404
+        # ... while the surviving spec keeps folding: its old run still
+        # resolves and a new run completes
+        assert mgr.get("greeter") is not None
+        st, doc = _req(port, "GET", f"/wfrun/{r1['id']}")
+        assert st == 200 and doc["status"] == "COMPLETED"
+        st, r3 = _req(port, "POST", "/wfrun",
+                      {"wf_spec_name": "greeter", "variables": {"who": "lin"}})
+        assert st == 201
+        st, doc = _req(port, "GET", f"/wfrun/{r3['id']}")
+        assert st == 200 and doc["status"] == "COMPLETED"
     finally:
         srv.stop()
         mgr.stop_all()
@@ -699,91 +700,6 @@ def test_cli_http_client_mode(spark, capsys):
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-def test_shared_engine_two_specs(spark):
-    """SURVEY §7 consolidated ops profile: TWO specs deployed into ONE
-    shared engine (`SparkEngineManager(shared=True)`) — a single
-    streaming query + checkpoint serves both, with per-spec serving
-    stores, entirely through the HTTP deploy path.  Undeploying one
-    spec leaves the other's runs GETtable and foldable."""
-    workdir = Path(tempfile.mkdtemp(prefix="http-shared-"))
-    store = MetadataStore(str(workdir / "meta"))
-    mgr = SparkEngineManager(spark, str(workdir / "engines"),
-                             executor=_executor, trigger_seconds=0.2,
-                             shared=True)
-    api = LittleHorseAPI(spark, metadata=store, engines=mgr)
-    srv = LittleHorseHTTPServer(api).start()
-    try:
-        port = srv.port
-        _req(port, "POST", "/taskDef", {"name": "greet"})
-        _req(port, "POST", "/taskDef", {"name": "double"})
-        st, _ = _req(port, "POST", "/wfSpec", _greet_spec())
-        assert st == 201
-        st, spec2 = _req(port, "POST", "/wfSpec", _double_spec())
-        assert st == 201
-
-        # ONE query object behind both handles; one shared events dir
-        g, d = mgr.get("greeter"), mgr.get("doubler")
-        assert g.query is d.query
-        assert g.events_dir == d.events_dir
-        # ... but per-spec serving stores
-        assert g.serving_dir != d.serving_dir
-
-        st, r1 = _req(port, "POST", "/wfrun",
-                      {"wf_spec_name": "greeter", "variables": {"who": "ada"}})
-        assert st == 201
-        st, r2 = _req(port, "POST", "/wfrun",
-                      {"wf_spec_name": "doubler", "variables": {"x": 21}})
-        assert st == 201
-
-        st, doc = _req(port, "GET", f"/wfrun/{r1['id']}")
-        assert st == 200 and doc["status"] == "COMPLETED"
-        st, v = _req(port, "GET", f"/wfrun/{r2['id']}/variable/x")
-        assert st == 200 and v["value"] == 42
-
-        # serving rows routed to the right spec's store: greeter's
-        # alias search hits only its own run
-        st, hits = _req(port, "GET", "/search/who/ada")
-        assert st == 200 and hits == [r1["id"]]
-
-        # Undeploy one spec: the shared query restarts over the same
-        # checkpoint; the survivor's old runs resolve and new runs fold
-        st, _ = _req(port, "DELETE", f"/wfSpec/{spec2['id']}")
-        assert st == 200
-        assert mgr.get("doubler") is None and mgr.get("greeter") is not None
-        st, _ = _req(port, "POST", "/wfrun", {"wf_spec_name": "doubler"})
-        assert st == 404
-        st, doc = _req(port, "GET", f"/wfrun/{r1['id']}")
-        assert st == 200 and doc["status"] == "COMPLETED"
-        st, r3 = _req(port, "POST", "/wfrun",
-                      {"wf_spec_name": "greeter", "variables": {"who": "lin"}})
-        assert st == 201
-        st, doc = _req(port, "GET", f"/wfrun/{r3['id']}")
-        assert st == 200 and doc["status"] == "COMPLETED"
-    finally:
-        srv.stop()
-        mgr.stop_all()
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-def test_shared_deploy_many_single_restart(spark):
-    """Boot recovery in shared mode: deploy_many starts ONE query for
-    the whole batch (not N sequential restarts), and direct callers'
-    specs without a metadata id get one defaulted."""
-    workdir = Path(tempfile.mkdtemp(prefix="shared-many-"))
-    mgr = SparkEngineManager(spark, str(workdir), executor=_executor,
-                             trigger_seconds=0.2, shared=True)
-    try:
-        s1, s2 = _greet_spec(), _double_spec()
-        s1.pop("id", None)  # direct caller: no metadata-stamped id
-        handles = mgr.deploy_many([s1, s2])
-        assert len(handles) == 2
-        assert handles[0].query is handles[1].query
-        assert mgr.get("greeter").spec["id"] == "greeter"  # defaulted
-    finally:
-        mgr.stop_all()
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
 def test_spec_rename_undeploys_old_engine(spark):
     """A re-POST that keeps the id but changes the name must stop the
     engine registered under the OLD name — otherwise its continuous
@@ -912,49 +828,6 @@ def test_run_engine_cache_is_bounded(spark):
     assert "r49" in api._run_engine and "r0" not in api._run_engine
 
 
-def test_shared_engine_with_tws(spark):
-    """The consolidated ops profile (`shared=True`) on the RocksDB-backed
-    transformWithState engine — one query, typed state + native
-    timers: the scoped confs compose and serving rows still route per
-    spec."""
-    from old_original_java_little_horse_spark.session import scoped_conf
-
-    workdir = Path(tempfile.mkdtemp(prefix="http-shared-tws-"))
-    store = MetadataStore(str(workdir / "meta"))
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        mgr = SparkEngineManager(spark, str(workdir / "engines"),
-                                 executor=_executor, trigger_seconds=0.2,
-                                 shared=True)
-        api = LittleHorseAPI(spark, metadata=store, engines=mgr)
-        srv = LittleHorseHTTPServer(api).start()
-        try:
-            port = srv.port
-            _req(port, "POST", "/taskDef", {"name": "greet"})
-            _req(port, "POST", "/taskDef", {"name": "double"})
-            assert _req(port, "POST", "/wfSpec", _greet_spec())[0] == 201
-            assert _req(port, "POST", "/wfSpec", _double_spec())[0] == 201
-            assert mgr.get("greeter").query is mgr.get("doubler").query
-
-            st, r1 = _req(port, "POST", "/wfrun",
-                          {"wf_spec_name": "greeter",
-                           "variables": {"who": "ada"}})
-            assert st == 201
-            st, r2 = _req(port, "POST", "/wfrun",
-                          {"wf_spec_name": "doubler",
-                           "variables": {"x": 21}})
-            assert st == 201
-            st, doc = _req(port, "GET", f"/wfrun/{r1['id']}")
-            assert st == 200 and doc["status"] == "COMPLETED"
-            st, v = _req(port, "GET", f"/wfrun/{r2['id']}/variable/x")
-            assert st == 200 and v["value"] == 42
-            st, hits = _req(port, "GET", "/search/who/ada")
-            assert st == 200 and hits == [r1["id"]]
-        finally:
-            srv.stop()
-            mgr.stop_all()
-            shutil.rmtree(workdir, ignore_errors=True)
-
-
 def test_metadata_replay_skips_torn_trailing_line():
     """A crash mid-append leaves a torn final line WITHOUT its newline;
     that record was never acknowledged (post() fsyncs before
@@ -1007,51 +880,57 @@ def test_metadata_replay_raises_on_complete_corrupt_line():
 def test_concurrent_deploys_are_serialized(monkeypatch):
     """MetadataStore.post() fires on_change OUTSIDE its lock, so two
     concurrent POST /wfSpec handler threads reach deploy() together.
-    Un-serialized, shared mode would start TWO streaming queries over
-    the ONE shared checkpoint (forbidden by Structured Streaming).
-    The manager's lock must keep (stop old → start new) atomic: at
-    most one start_continuous_shared in flight, and every spec's
-    handle points at the LAST started query."""
+    Un-serialized, two deploys of one name could both start a query
+    and leave one of them never stopped.  The manager's lock must keep
+    (stop old → start new) atomic: at most one start_continuous in
+    flight, exactly one live handle, and every superseded query
+    stopped."""
     import tempfile
     import threading
     import time as _time
 
     from old_original_java_little_horse_spark.streaming import engine as se
 
-    active = {"n": 0, "max": 0, "starts": 0}
+    active = {"n": 0, "max": 0}
+    started: list = []
     gate = threading.Lock()
 
     class FakeQuery:
-        def stop(self):
-            pass
+        stopped = False
 
-    def fake_start_shared(*a, **k):
+        def stop(self):
+            self.stopped = True
+
+    def fake_start(*a, **k):
         with gate:
             active["n"] += 1
-            active["starts"] += 1
             active["max"] = max(active["max"], active["n"])
         _time.sleep(0.05)  # widen the overlap window
+        q = FakeQuery()
         with gate:
             active["n"] -= 1
-        return FakeQuery()
+            started.append(q)
+        return q
 
-    monkeypatch.setattr(se, "start_continuous_shared", fake_start_shared)
+    monkeypatch.setattr(se, "start_continuous", fake_start)
     with tempfile.TemporaryDirectory() as d:
-        mgr = SparkEngineManager(spark=None, base_dir=d, shared=True)
-        specs = [{"name": f"wf{i}", "entrypoint": "e",
-                  "thread_specs": {"e": {"nodes": {}}}} for i in range(4)]
-        threads = [threading.Thread(target=mgr.deploy, args=(s,))
-                   for s in specs]
+        mgr = SparkEngineManager(spark=None, base_dir=d)
+        spec = {"name": "wf", "entrypoint": "e",
+                "thread_specs": {"e": {"nodes": {}}}}
+        threads = [threading.Thread(target=mgr.deploy, args=(spec,))
+                   for _ in range(4)]
         for t in threads:
             t.start()
         for t in threads:
-            t.join()
-        assert active["max"] == 1, "two shared queries ran concurrently"
-        assert active["starts"] == 4
-        handles = {h.spec["name"]: h for h in mgr.handles()}
-        assert set(handles) == {s["name"] for s in specs}
-        # All specs share the one (last-started) query object.
-        assert len({id(h.query) for h in handles.values()}) == 1
+            t.join(30)
+        assert not any(t.is_alive() for t in threads), "deploy hung"
+        assert active["max"] == 1, "two starts ran concurrently"
+        assert len(started) == 4
+        handles = mgr.handles()
+        assert len(handles) == 1 and handles[0].query is started[-1]
+        assert all(q.stopped for q in started[:-1]), \
+            "a superseded query was never stopped"
+        assert not started[-1].stopped
 
 
 def test_validate_rejects_unknown_named_exception_handler():

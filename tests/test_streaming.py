@@ -289,42 +289,6 @@ def test_timer_pump_completes_sleep_workflow(spark):
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-def test_multi_spec_engine_one_stream(spark):
-    """One engine, many workflows: a spec registry routes each run to
-    its pinned spec; unknown-spec events are dropped (SURVEY §7
-    'dynamic workflows')."""
-    from old_original_java_little_horse_spark.engine.batch import run_events_batch
-    from old_original_java_little_horse_spark.engine.fold import make_spec_registry
-    from old_original_java_little_horse_spark.sdk.builder import Workflow
-
-    wf_a = Workflow("alpha")
-    ta = wf_a.thread("entrypoint")
-    ta.execute("echo", x="from-alpha")
-    wf_b = Workflow("beta")
-    tb = wf_b.thread("entrypoint")
-    tb.execute("echo", x="from-beta-1")
-    tb.execute("echo", x="from-beta-2")
-    registry = make_spec_registry([wf_a.build(), wf_b.build()])
-
-    def exec_echo(task, subs):
-        return {"stdout": subs["x"], "success": True, "returncode": 0}
-
-    rows = [
-        ("rA", "alpha-spec", "alpha", "WF_RUN_STARTED", 0, 1000, 0, json.dumps({"variables": {}})),
-        ("rB", "beta-spec", "beta", "WF_RUN_STARTED", 0, 1000, 0, json.dumps({"variables": {}})),
-        ("rC", "ghost-spec", "ghost", "WF_RUN_STARTED", 0, 1000, 0, json.dumps({"variables": {}})),
-    ]
-    df = spark.createDataFrame(rows, schema=WF_EVENT_SCHEMA)
-    out = {r["wf_run_id"]: r for r in
-           run_events_batch(df, registry, executor=exec_echo).collect()}
-    assert set(out) == {"rA", "rB"}  # ghost dropped
-    assert out["rA"]["n_tasks"] == 1 and out["rA"]["status"] == "COMPLETED"
-    assert out["rB"]["n_tasks"] == 2 and out["rB"]["status"] == "COMPLETED"
-    stdouts = [t["stdout"] for t in
-               json.loads(out["rB"]["state_json"])["thread_runs"][0]["task_runs"]]
-    assert stdouts == ["from-beta-1", "from-beta-2"]
-
-
 def test_native_timers_complete_sleep_self_contained(spark):
     """ST2, no satellite: with `native_timers` the engine itself fires
     the stored SLEEP timer via group-state ProcessingTimeTimeout — the

@@ -104,17 +104,17 @@ def probe_cell(spark, n: int, cap: int | None,
     from old_original_java_little_horse_spark.streaming.admission import (
         CatchUpAdmission)
     from old_original_java_little_horse_spark.streaming.engine import (
-        await_read_your_writes, start_continuous_shared)
+        await_read_your_writes, start_continuous)
 
     spec = all_cases()["basic"].spec
     workdir = tempfile.mkdtemp(prefix=f"catchup-{n}-{cap or 'uncapped'}-")
     events_dir = os.path.join(workdir, "events")
     os.makedirs(events_dir, exist_ok=True)
-    q = start_continuous_shared(
-        spark, events_dir + "/*", [spec],
+    q = start_continuous(
+        spark, events_dir + "/*", spec,
         checkpoint_dir=os.path.join(workdir, "ckpt"),
         output_dir=os.path.join(workdir, "out"),
-        serving_dirs={spec["name"]: os.path.join(workdir, "serving")},
+        serving_dir=os.path.join(workdir, "serving"),
         executor=execute,
         trigger_seconds=trigger_seconds,
         state_partitions=state_partitions)
